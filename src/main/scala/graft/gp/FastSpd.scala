@@ -21,18 +21,18 @@ object FastSpd {
 
   private val blas = BLAS.getInstance
   private val lapack = LAPACK.getInstance
-  /** Panel width (GRAFT_SPD_NB to experiment). Measured on this host at
-    * the bench's n=400 tile cap (median-of-9 KernelBench, ~0% steal):
-    * NB=48 gives ~4% higher absolute 32-thread throughput (1023 vs 979
-    * evals/s) but perturbs L-BFGS trajectories enough to flip one benign
-    * line-search-stall flag; 64 is kept as the default for bit-stable
-    * goldens. Packed-triangular storage was evaluated and REJECTED: the
+  /** Panel width, fixed at 64 because the L-BFGS goldens are bit-stable
+    * only at this value. Measured at the bench's n=400 tile cap
+    * (median-of-9 KernelBench, ~0% steal): NB=48 gives ~4% higher absolute
+    * 32-thread throughput (1023 vs 979 evals/s) but perturbs L-BFGS
+    * trajectories enough to flip one benign line-search-stall flag.
+    * Packed-triangular storage was evaluated and REJECTED: the
     * hot path already touches ONLY the upper triangle (lda=n), so packing
     * would not reduce the streamed bytes; the remaining 8->32 scaling gap
     * is the shared memory system, evidenced by n=200 (L2-resident
     * triangles) scaling at 0.91 with identical code.
     */
-  private val NB = sys.env.getOrElse("GRAFT_SPD_NB", "64").toInt
+  private val NB = 64
 
   /** In-place upper Cholesky: A = U^T U, upper triangle of `a` (col-major
     * n x n, lda = n) replaced by U. Returns 0 on success, >0 if not SPD.

@@ -1,7 +1,6 @@
 package graft.gp
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import breeze.optimize.{DiffFunction, LBFGS}
 
 /** Hyperparameters in constrained (parameter) space; vector order follows the
   * reference convention [lengthscales..., kernel_variance, likelihood_variance]
@@ -226,37 +225,10 @@ final class Matern32Gpr(coords: DenseMatrix[Double], y: DenseVector[Double]) {
       maxIter: Int = 100,
       tolerance: Double = 1e-7): GprFitResult = {
     require(bijectors.length == d + 2, s"need ${d + 2} bijectors, got ${bijectors.length}")
-    val theta0 = init.toArray
-    val u0 = DenseVector(theta0.indices.map(i => bijectors(i).inv(theta0(i))).toArray)
-    require(u0.forall(v => !v.isNaN), "initial parameters map to NaN in variable space")
-
-    val f = new DiffFunction[DenseVector[Double]] {
-      def calculate(u: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val theta = Array.tabulate(d + 2)(i => bijectors(i).fwd(u(i)))
-        val (v, gTheta) = nlmlAndGrad(GprParams.fromArray(theta))
-        if (v.isInfinite)
-          // steer the line search back towards u0 when K is not SPD
-          (1e25, u - u0)
-        else {
-          val gU = DenseVector(Array.tabulate(d + 2)(i => gTheta(i) * bijectors(i).grad(u(i))))
-          (v, gU)
-        }
-      }
-    }
-
-    try {
-      val lbfgs = new LBFGS[DenseVector[Double]](maxIter = maxIter, m = 7, tolerance = tolerance)
-      val state = lbfgs.minimizeAndReturnState(f, u0)
-      val thetaOpt = Array.tabulate(d + 2)(i => bijectors(i).fwd(state.x(i)))
-      val pOpt = GprParams.fromArray(thetaOpt)
-      val objective = nlml(pOpt)
-      if (objective.isInfinite || objective.isNaN)
-        GprFitResult(init, nlml(init), success = false, state.iter)
-      else
-        GprFitResult(pOpt, objective, success = !state.searchFailed, state.iter)
-    } catch {
-      case _: Exception => GprFitResult(init, nlml(init), success = false, 0)
-    }
+    val (theta, objective, ok, iters) = BijectedLbfgs.minimise(init.toArray, bijectors,
+      t => nlml(GprParams.fromArray(t)), t => nlmlAndGrad(GprParams.fromArray(t)),
+      maxIter, tolerance)
+    GprFitResult(GprParams.fromArray(theta), objective, ok, iters)
   }
 
   /** Posterior prediction at xs (m x d, already scaled). */

@@ -1,7 +1,7 @@
 package graft.gp
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import breeze.optimize.{DiffFunction, LBFGS}
+import graft.gp.DenseOps._
 
 /** Exact multi-output GP regression with a linear observation (forward)
   * model — the reference's `MultioutputGPR` with `LinearModelLikelihood`
@@ -238,58 +238,7 @@ final class MultioutputGpr(coords: DenseMatrix[Double], ys: DenseMatrix[Double],
   def optimise(init: Array[Double], bijectors: Array[Bijector],
                maxIter: Int = 60, tolerance: Double = 1e-7): (Array[Double], Double, Boolean, Int) = {
     require(bijectors.length == nHypers)
-    val u0 = DenseVector(init.indices.map(i => bijectors(i).inv(init(i))).toArray)
-    require(u0.forall(v => !v.isNaN), "initial parameters map to NaN in variable space")
-    val fd = 1e-6
-    val f = new DiffFunction[DenseVector[Double]] {
-      def calculate(u: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val theta = Array.tabulate(nHypers)(i => bijectors(i).fwd(u(i)))
-        val v0 = nlml(theta)
-        if (v0.isInfinite) return (1e25, u - u0)
-        val g = new Array[Double](nHypers)
-        var i = 0
-        while (i < nHypers) {
-          val up = theta.clone(); up(i) += fd
-          val dn = theta.clone(); dn(i) -= fd
-          g(i) = (nlml(up) - nlml(dn)) / (2 * fd) * bijectors(i).grad(u(i))
-          i += 1
-        }
-        (v0, DenseVector(g))
-      }
-    }
-    try {
-      val lbfgs = new LBFGS[DenseVector[Double]](maxIter = maxIter, m = 7, tolerance = tolerance)
-      val st = lbfgs.minimizeAndReturnState(f, u0)
-      val hOpt = Array.tabulate(nHypers)(i => bijectors(i).fwd(st.x(i)))
-      val obj = nlml(hOpt)
-      if (obj.isInfinite || obj.isNaN) (init, nlml(init), false, st.iter)
-      else (hOpt, obj, !st.searchFailed, st.iter)
-    } catch { case _: Exception => (init, nlml(init), false, 0) }
-  }
-
-  private def lowerSolve(l: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] = {
-    val out = v.copy
-    var i = 0
-    while (i < l.rows) {
-      var ss = out(i)
-      var j = 0
-      while (j < i) { ss -= l(i, j) * out(j); j += 1 }
-      out(i) = ss / l(i, i)
-      i += 1
-    }
-    out
-  }
-
-  private def upperSolve(l: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] = {
-    val out = v.copy
-    var i = l.rows - 1
-    while (i >= 0) {
-      var ss = out(i)
-      var j = i + 1
-      while (j < l.rows) { ss -= l(j, i) * out(j); j += 1 }
-      out(i) = ss / l(i, i)
-      i -= 1
-    }
-    out
+    BijectedLbfgs.minimise(init, bijectors, nlml, BijectedLbfgs.centralDiff(nlml),
+      maxIter, tolerance)
   }
 }

@@ -1,6 +1,7 @@
 package graft.gp
 
 import breeze.linalg.{cholesky, diag, eigSym, DenseMatrix, DenseVector}
+import graft.gp.DenseOps._
 
 /** Nyström low-rank approximation of the exact GP (reference `Nystroem`,
   * GPSat/models/pure_python_gpr.py:408-435; Williams & Seeger 2001): a
@@ -69,7 +70,7 @@ object NystroemGpr {
     // alpha = L^T \ (L \ (u~^T / sn2))   (m x n)
     val rhs = uTilde.t / sn2
     val z = lowerSolve(l, rhs)
-    val alpha = upperSolveT(l, z)
+    val alpha = upperSolve(l, z)
     // Ki = I/sn2 - (u~/sn2) alpha
     val ki = DenseMatrix.tabulate[Double](n, n) { (i, j) =>
       var acc = 0.0
@@ -123,41 +124,5 @@ object NystroemGpr {
       j += 1
     }
     GprPrediction(fs, fsVar, yVar)
-  }
-
-  private def lowerSolve(l: DenseMatrix[Double], b: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val n = l.rows
-    val out = b.copy
-    var c = 0
-    while (c < b.cols) {
-      var i = 0
-      while (i < n) {
-        var s = out(i, c)
-        var j = 0
-        while (j < i) { s -= l(i, j) * out(j, c); j += 1 }
-        out(i, c) = s / l(i, i)
-        i += 1
-      }
-      c += 1
-    }
-    out
-  }
-
-  private def upperSolveT(l: DenseMatrix[Double], b: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val n = l.rows
-    val out = b.copy
-    var c = 0
-    while (c < b.cols) {
-      var i = n - 1
-      while (i >= 0) {
-        var s = out(i, c)
-        var j = i + 1
-        while (j < n) { s -= l(j, i) * out(j, c); j += 1 }
-        out(i, c) = s / l(i, i)
-        i -= 1
-      }
-      c += 1
-    }
-    out
   }
 }

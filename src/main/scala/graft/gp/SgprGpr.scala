@@ -1,7 +1,6 @@
 package graft.gp
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import breeze.optimize.{DiffFunction, LBFGS}
 import dev.ludovic.netlib.blas.BLAS
 
 /** Titsias (2009) sparse variational GP regression (SGPR) with a Matern-3/2
@@ -280,38 +279,17 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
       if (g == null) (v, new Array[Double](d + 2)) else (v, g)
     } catch { case _: Exception => (Double.PositiveInfinity, new Array[Double](d + 2)) }
 
-  /** L-BFGS optimisation of the negative ELBO in bijector space — the same
-    * harness as [[Matern32Gpr.optimise]] (the reference runs scipy L-BFGS-B
+  /** L-BFGS optimisation of the negative ELBO in bijector space through
+    * [[BijectedLbfgs]] (the reference runs scipy L-BFGS-B
     * through gpflow.optimizers.Scipy, gpflow_models.py:872-901).
     */
   def optimise(init: GprParams, bijectors: Array[Bijector],
                maxIter: Int = 100, tolerance: Double = 1e-7): GprFitResult = {
     require(bijectors.length == d + 2, s"need ${d + 2} bijectors, got ${bijectors.length}")
-    val theta0 = init.toArray
-    val u0 = DenseVector(theta0.indices.map(i => bijectors(i).inv(theta0(i))).toArray)
-    require(u0.forall(v => !v.isNaN), "initial parameters map to NaN in variable space")
-
-    val f = new DiffFunction[DenseVector[Double]] {
-      def calculate(u: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val theta = Array.tabulate(d + 2)(i => bijectors(i).fwd(u(i)))
-        val (v, gTheta) = negElboAndGrad(GprParams.fromArray(theta))
-        if (v.isInfinite) (1e25, u - u0)
-        else (v, DenseVector(Array.tabulate(d + 2)(i => gTheta(i) * bijectors(i).grad(u(i)))))
-      }
-    }
-    try {
-      val lbfgs = new LBFGS[DenseVector[Double]](maxIter = maxIter, m = 7, tolerance = tolerance)
-      val state = lbfgs.minimizeAndReturnState(f, u0)
-      val thetaOpt = Array.tabulate(d + 2)(i => bijectors(i).fwd(state.x(i)))
-      val pOpt = GprParams.fromArray(thetaOpt)
-      val objective = negElbo(pOpt)
-      if (objective.isInfinite || objective.isNaN)
-        GprFitResult(init, negElbo(init), success = false, state.iter)
-      else
-        GprFitResult(pOpt, objective, success = !state.searchFailed, state.iter)
-    } catch {
-      case _: Exception => GprFitResult(init, negElbo(init), success = false, 0)
-    }
+    val (theta, objective, ok, iters) = BijectedLbfgs.minimise(init.toArray, bijectors,
+      t => negElbo(GprParams.fromArray(t)), t => negElboAndGrad(GprParams.fromArray(t)),
+      maxIter, tolerance)
+    GprFitResult(GprParams.fromArray(theta), objective, ok, iters)
   }
 
   /** Posterior prediction at xs (mStar x d, already scaled) — GPflow

@@ -1,7 +1,7 @@
 package graft.gp
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import breeze.optimize.{DiffFunction, LBFGS}
+import graft.gp.DenseOps._
 
 /** KISS-GP / SKI (structured kernel interpolation, Wilson & Nickisch 2015)
   * with a separable per-dimension Matern kernel — the reference's
@@ -347,57 +347,13 @@ final class SkiGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     GprPrediction(fs, fsVar, yVar)
   }
 
-  /** ANALYTIC-gradient L-BFGS in bijector space (same harness as SGPR):
+  /** ANALYTIC-gradient L-BFGS in bijector space ([[BijectedLbfgs]]):
     * one Cholesky + K^-1 per evaluation via [[nlmlWithGrad]] instead of
     * the 2(2d+1) extra factorizations finite differences cost.
     */
   def optimise(init: Array[Double], bijectors: Array[Bijector],
                maxIter: Int = 60, tolerance: Double = 1e-7): (Array[Double], Double, Boolean, Int) = {
     require(bijectors.length == nHypers)
-    val u0 = DenseVector(init.indices.map(i => bijectors(i).inv(init(i))).toArray)
-    require(u0.forall(v => !v.isNaN), "initial parameters map to NaN in variable space")
-    val f = new DiffFunction[DenseVector[Double]] {
-      def calculate(u: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val theta = Array.tabulate(nHypers)(i => bijectors(i).fwd(u(i)))
-        val (v0, gTheta) = nlmlWithGrad(theta)
-        if (v0.isInfinite) return (1e25, u - u0)
-        val g = Array.tabulate(nHypers)(i => gTheta(i) * bijectors(i).grad(u(i)))
-        (v0, DenseVector(g))
-      }
-    }
-    try {
-      val lbfgs = new LBFGS[DenseVector[Double]](maxIter = maxIter, m = 7, tolerance = tolerance)
-      val st = lbfgs.minimizeAndReturnState(f, u0)
-      val hOpt = Array.tabulate(nHypers)(i => bijectors(i).fwd(st.x(i)))
-      val obj = nlml(hOpt)
-      if (obj.isInfinite || obj.isNaN) (init, nlml(init), false, st.iter)
-      else (hOpt, obj, !st.searchFailed, st.iter)
-    } catch { case _: Exception => (init, nlml(init), false, 0) }
-  }
-
-  private def lowerSolve(l: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] = {
-    val out = v.copy
-    var i = 0
-    while (i < l.rows) {
-      var ss = out(i)
-      var j = 0
-      while (j < i) { ss -= l(i, j) * out(j); j += 1 }
-      out(i) = ss / l(i, i)
-      i += 1
-    }
-    out
-  }
-
-  private def upperSolve(l: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] = {
-    val out = v.copy
-    var i = l.rows - 1
-    while (i >= 0) {
-      var ss = out(i)
-      var j = i + 1
-      while (j < l.rows) { ss -= l(j, i) * out(j); j += 1 }
-      out(i) = ss / l(i, i)
-      i -= 1
-    }
-    out
+    BijectedLbfgs.minimise(init, bijectors, nlml, nlmlWithGrad, maxIter, tolerance)
   }
 }

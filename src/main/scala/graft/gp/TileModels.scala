@@ -86,26 +86,16 @@ object TileModels {
     def name: String = "GraftSVGP"
   }
 
-  private final class VffModel(coords: DenseMatrix[Double], y: DenseVector[Double], rank: Int)
-      extends TileModel {
-    private val dd = coords.cols
-    // rank = TOTAL inducing-feature budget: per-dim frequency count m such
-    // that (2m-1)^d <= rank (at least the zero + first harmonic)
-    private val mPerDim = math.max(2, ((math.pow(rank.toDouble, 1.0 / dd) + 1.0) / 2.0).toInt)
-    // domain: data extent + one full span of margin per side — VFF features
-    // must live on an interval a few lengthscales wider than the data or
-    // the bound stays boundary-limited and shrinks the fitted variance
-    // (the reference exposes this as domain_size, models/vff_model.py:103-199)
-    private val (aArr, bArr) = {
-      val lo = Array.tabulate(dd)(k => (0 until coords.rows).map(coords(_, k)).min)
-      val hi = Array.tabulate(dd)(k => (0 until coords.rows).map(coords(_, k)).max)
-      val margin = Array.tabulate(dd)(k => math.max(hi(k) - lo(k), 1e-6) + 1e-8)
-      (Array.tabulate(dd)(k => lo(k) - margin(k)), Array.tabulate(dd)(k => hi(k) + margin(k)))
-    }
-    private val gp = new VffGpr(coords, y, Array.fill(dd)(mPerDim), aArr, bArr)
-    // GprParams <-> packed VFF hypers: the single kernel variance maps to
-    // equal per-dim factors (product preserved); fitted per-dim values are
-    // kept as internal state for prediction
+  /** Base of the models whose packed hypers split the kernel variance into
+    * per-dim factors, [ell_1..ell_d, var_1..var_d, s] (VFF, ASVGP, SKI).
+    * GprParams maps in with equal per-dim factors (product preserved).
+    */
+  private abstract class PerDimVarianceModel(protected val dd: Int) extends TileModel {
+    protected def objectiveH(h: Array[Double]): Double
+    protected def optimiseH(h: Array[Double], bij: Array[Bijector], maxIter: Int,
+                            tol: Double): (Array[Double], Double, Boolean, Int)
+    protected def predictH(xs: DenseMatrix[Double], h: Array[Double]): GprPrediction
+
     private def toH(p: GprParams): Array[Double] =
       p.lengthscales ++ Array.fill(dd)(math.pow(p.kernelVariance, 1.0 / dd)) :+ p.likelihoodVariance
     // The fitted per-dim variance split is richer than the single
@@ -121,60 +111,60 @@ object TileModels {
         fp.likelihoodVariance == p.likelihoodVariance => h
       case _ => toH(p)
     }
-    def objective(p: GprParams): Double = gp.negElbo(hFor(p))
+    def objective(p: GprParams): Double = objectiveH(hFor(p))
     def optimise(init: GprParams, bij: Array[Bijector], maxIter: Int, tol: Double): GprFitResult = {
       val bijH: Array[Bijector] =
         bij.take(dd) ++ Array.fill[Bijector](dd)(Bijectors.default) :+ bij.last
-      val (hOpt, obj, ok, iters) = gp.optimise(toH(init), bijH, maxIter, tol)
+      val (hOpt, obj, ok, iters) = optimiseH(toH(init), bijH, maxIter, tol)
       val pOpt = GprParams(hOpt.take(dd),
         (dd until 2 * dd).map(hOpt).product, hOpt(2 * dd))
       fittedH = Some((pOpt, hOpt))
       GprFitResult(pOpt, obj, ok, iters)
     }
-    def predict(xs: DenseMatrix[Double], p: GprParams): GprPrediction =
-      gp.predict(xs, hFor(p))
+    def predict(xs: DenseMatrix[Double], p: GprParams): GprPrediction = predictH(xs, hFor(p))
+  }
+
+  /** Domain of the inter-domain features: data extent + one full span of
+    * margin per side — VFF features (and ASVGP splines) must live on an
+    * interval a few lengthscales wider than the data or the bound stays
+    * boundary-limited and shrinks the fitted variance (the reference
+    * exposes this as domain_size, models/vff_model.py:103-199).
+    */
+  private def paddedDomain(coords: DenseMatrix[Double]): (Array[Double], Array[Double]) = {
+    val dd = coords.cols
+    val lo = Array.tabulate(dd)(k => (0 until coords.rows).map(coords(_, k)).min)
+    val hi = Array.tabulate(dd)(k => (0 until coords.rows).map(coords(_, k)).max)
+    val margin = Array.tabulate(dd)(k => math.max(hi(k) - lo(k), 1e-6) + 1e-8)
+    (Array.tabulate(dd)(k => lo(k) - margin(k)), Array.tabulate(dd)(k => hi(k) + margin(k)))
+  }
+
+  private final class VffModel(coords: DenseMatrix[Double], y: DenseVector[Double], rank: Int)
+      extends PerDimVarianceModel(coords.cols) {
+    // rank = TOTAL inducing-feature budget: per-dim frequency count m such
+    // that (2m-1)^d <= rank (at least the zero + first harmonic)
+    private val mPerDim = math.max(2, ((math.pow(rank.toDouble, 1.0 / dd) + 1.0) / 2.0).toInt)
+    private val (aArr, bArr) = paddedDomain(coords)
+    private val gp = new VffGpr(coords, y, Array.fill(dd)(mPerDim), aArr, bArr)
+    protected def objectiveH(h: Array[Double]): Double = gp.negElbo(h)
+    protected def optimiseH(h: Array[Double], bij: Array[Bijector], maxIter: Int, tol: Double) =
+      gp.optimise(h, bij, maxIter, tol)
+    protected def predictH(xs: DenseMatrix[Double], h: Array[Double]): GprPrediction =
+      gp.predict(xs, h)
     def name: String = "GraftVFF"
   }
 
   private final class AsvgpModel(coords: DenseMatrix[Double], y: DenseVector[Double], rank: Int)
-      extends TileModel {
-    private val dd = coords.cols
+      extends PerDimVarianceModel(coords.cols) {
     // rank = TOTAL inducing-feature budget; B-splines converge at h^2 so
     // give each dim the largest m with m^d <= rank (min 3 required)
     private val mPerDim = math.max(3, math.pow(rank.toDouble, 1.0 / dd).toInt)
-    // domain: data extent + one full span of margin per side (same policy
-    // as VffModel; splines outside the data cost features but keep the
-    // bound from going boundary-loose)
-    private val (aArr, bArr) = {
-      val lo = Array.tabulate(dd)(k => (0 until coords.rows).map(coords(_, k)).min)
-      val hi = Array.tabulate(dd)(k => (0 until coords.rows).map(coords(_, k)).max)
-      val margin = Array.tabulate(dd)(k => math.max(hi(k) - lo(k), 1e-6) + 1e-8)
-      (Array.tabulate(dd)(k => lo(k) - margin(k)), Array.tabulate(dd)(k => hi(k) + margin(k)))
-    }
+    private val (aArr, bArr) = paddedDomain(coords)
     private val gp = new AsvgpGpr(coords, y, Array.fill(dd)(mPerDim), aArr, bArr)
-    private def toH(p: GprParams): Array[Double] =
-      p.lengthscales ++ Array.fill(dd)(math.pow(p.kernelVariance, 1.0 / dd)) :+ p.likelihoodVariance
-    // same fitted-params keying as VffModel: the per-dim variance split is
-    // only substituted when the caller passes the exact fitted params
-    private var fittedH: Option[(GprParams, Array[Double])] = None
-    private def hFor(p: GprParams): Array[Double] = fittedH match {
-      case Some((fp, h)) if fp.lengthscales.sameElements(p.lengthscales) &&
-        fp.kernelVariance == p.kernelVariance &&
-        fp.likelihoodVariance == p.likelihoodVariance => h
-      case _ => toH(p)
-    }
-    def objective(p: GprParams): Double = gp.negElbo(hFor(p))
-    def optimise(init: GprParams, bij: Array[Bijector], maxIter: Int, tol: Double): GprFitResult = {
-      val bijH: Array[Bijector] =
-        bij.take(dd) ++ Array.fill[Bijector](dd)(Bijectors.default) :+ bij.last
-      val (hOpt, obj, ok, iters) = gp.optimise(toH(init), bijH, maxIter, tol)
-      val pOpt = GprParams(hOpt.take(dd),
-        (dd until 2 * dd).map(hOpt).product, hOpt(2 * dd))
-      fittedH = Some((pOpt, hOpt))
-      GprFitResult(pOpt, obj, ok, iters)
-    }
-    def predict(xs: DenseMatrix[Double], p: GprParams): GprPrediction =
-      gp.predict(xs, hFor(p))
+    protected def objectiveH(h: Array[Double]): Double = gp.negElbo(h)
+    protected def optimiseH(h: Array[Double], bij: Array[Bijector], maxIter: Int, tol: Double) =
+      gp.optimise(h, bij, maxIter, tol)
+    protected def predictH(xs: DenseMatrix[Double], h: Array[Double]): GprPrediction =
+      gp.predict(xs, h)
     def name: String = "GraftASVGP"
   }
 
@@ -197,34 +187,17 @@ object TileModels {
   }
 
   /** KISS-GP / SKI (gpytorch_models.py:321-386) — rank = total grid budget,
-    * split per dim; same fitted-params keying as VFF/ASVGP.
+    * split per dim.
     */
   private final class SkiModel(coords: DenseMatrix[Double], y: DenseVector[Double], rank: Int)
-      extends TileModel {
-    private val dd = coords.cols
+      extends PerDimVarianceModel(coords.cols) {
     private val gPerDim = math.max(6, math.pow(rank.toDouble, 1.0 / dd).toInt)
     private val gp = new SkiGpr(coords, y, Array.fill(dd)(gPerDim))
-    private def toH(p: GprParams): Array[Double] =
-      p.lengthscales ++ Array.fill(dd)(math.pow(p.kernelVariance, 1.0 / dd)) :+ p.likelihoodVariance
-    private var fittedH: Option[(GprParams, Array[Double])] = None
-    private def hFor(p: GprParams): Array[Double] = fittedH match {
-      case Some((fp, h)) if fp.lengthscales.sameElements(p.lengthscales) &&
-        fp.kernelVariance == p.kernelVariance &&
-        fp.likelihoodVariance == p.likelihoodVariance => h
-      case _ => toH(p)
-    }
-    def objective(p: GprParams): Double = gp.nlml(hFor(p))
-    def optimise(init: GprParams, bij: Array[Bijector], maxIter: Int, tol: Double): GprFitResult = {
-      val bijH: Array[Bijector] =
-        bij.take(dd) ++ Array.fill[Bijector](dd)(Bijectors.default) :+ bij.last
-      val (hOpt, obj, ok, iters) = gp.optimise(toH(init), bijH, maxIter, tol)
-      val pOpt = GprParams(hOpt.take(dd),
-        (dd until 2 * dd).map(hOpt).product, hOpt(2 * dd))
-      fittedH = Some((pOpt, hOpt))
-      GprFitResult(pOpt, obj, ok, iters)
-    }
-    def predict(xs: DenseMatrix[Double], p: GprParams): GprPrediction =
-      gp.predict(xs, hFor(p))
+    protected def objectiveH(h: Array[Double]): Double = gp.nlml(h)
+    protected def optimiseH(h: Array[Double], bij: Array[Bijector], maxIter: Int, tol: Double) =
+      gp.optimise(h, bij, maxIter, tol)
+    protected def predictH(xs: DenseMatrix[Double], h: Array[Double]): GprPrediction =
+      gp.predict(xs, h)
     def name: String = "GraftKISS"
   }
 

@@ -1,7 +1,7 @@
 package graft.gp
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import breeze.optimize.{DiffFunction, LBFGS}
+import graft.gp.DenseOps._
 
 /** Variational Fourier Features GP (Hensman, Durrande & Solin 2017) with a
   * separable per-dimension Matern-3/2 kernel — the reference's
@@ -76,27 +76,6 @@ final class VffGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     out
   }
 
-  /** Khatri-Rao row stack across dims (make_kvs_np, vff.py:553-561):
-    * rows(A (x) B) = repeat(A rows, B.rows) * tile(B rows). */
-  private def kvs(mats: Seq[DenseMatrix[Double]]): DenseMatrix[Double] =
-    mats.reduce { (ab, c) =>
-      val out = DenseMatrix.zeros[Double](ab.rows * c.rows, ab.cols)
-      var i = 0
-      while (i < ab.rows) {
-        var j = 0
-        while (j < c.rows) {
-          var col = 0
-          while (col < ab.cols) {
-            out(i * c.rows + j, col) = ab(i, col) * c(j, col)
-            col += 1
-          }
-          j += 1
-        }
-        i += 1
-      }
-      out
-    }
-
   // static precomputes: Kuf, Kuf y, Kuf Kfu, y^T y (hyper-independent)
   private val kuf: DenseMatrix[Double] =
     kvs((0 until d).map(k => kufDim(k, i => coords(i, k), n)))
@@ -152,27 +131,6 @@ final class VffGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     (kuu, inv, logdet)
   }
 
-  private def kron(msq: Seq[DenseMatrix[Double]]): DenseMatrix[Double] =
-    msq.reduce { (x, z) =>
-      val out = DenseMatrix.zeros[Double](x.rows * z.rows, x.cols * z.cols)
-      var i = 0
-      while (i < x.rows) {
-        var j = 0
-        while (j < x.cols) {
-          val v = x(i, j)
-          var p = 0
-          while (p < z.rows) {
-            var q = 0
-            while (q < z.cols) { out(i * z.rows + p, j * z.cols + q) = v * z(p, q); q += 1 }
-            p += 1
-          }
-          j += 1
-        }
-        i += 1
-      }
-      out
-    }
-
   /** packed hyper vector: [ell_1..ell_d, var_1..var_d, s]. */
   def nHypers: Int = 2 * d + 1
 
@@ -214,38 +172,13 @@ final class VffGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
   /** L-BFGS in bijector space with central-difference gradients over the
     * 2d+1 hyperparameters — each evaluation is O(M_total^3), independent
     * of n, so FD costs ~(4d+2) cheap evals per iteration.
+    * Returns (hypers, objective, converged, iterationsActuallyRun).
     */
-  /** Returns (hypers, objective, converged, iterationsActuallyRun). */
   def optimise(init: Array[Double], bijectors: Array[Bijector],
                maxIter: Int = 60, tolerance: Double = 1e-7): (Array[Double], Double, Boolean, Int) = {
     require(bijectors.length == nHypers)
-    val u0 = DenseVector(init.indices.map(i => bijectors(i).inv(init(i))).toArray)
-    require(u0.forall(v => !v.isNaN), "initial parameters map to NaN in variable space")
-    val h = 1e-6
-    val f = new DiffFunction[DenseVector[Double]] {
-      def calculate(u: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val theta = Array.tabulate(nHypers)(i => bijectors(i).fwd(u(i)))
-        val v0 = negElbo(theta)
-        if (v0.isInfinite) return (1e25, u - u0)
-        val g = new Array[Double](nHypers)
-        var i = 0
-        while (i < nHypers) {
-          val up = theta.clone(); up(i) += h
-          val dn = theta.clone(); dn(i) -= h
-          g(i) = (negElbo(up) - negElbo(dn)) / (2 * h) * bijectors(i).grad(u(i))
-          i += 1
-        }
-        (v0, DenseVector(g))
-      }
-    }
-    try {
-      val lbfgs = new LBFGS[DenseVector[Double]](maxIter = maxIter, m = 7, tolerance = tolerance)
-      val st = lbfgs.minimizeAndReturnState(f, u0)
-      val hOpt = Array.tabulate(nHypers)(i => bijectors(i).fwd(st.x(i)))
-      val obj = negElbo(hOpt)
-      if (obj.isInfinite || obj.isNaN) (init, negElbo(init), false, st.iter)
-      else (hOpt, obj, !st.searchFailed, st.iter)
-    } catch { case _: Exception => (init, negElbo(init), false, 0) }
+    BijectedLbfgs.minimise(init, bijectors, negElbo, BijectedLbfgs.centralDiff(negElbo),
+      maxIter, tolerance)
   }
 
   /** Posterior prediction (GPR_kron.predict_f, vff.py:647-676) with the
@@ -317,36 +250,6 @@ final class VffGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
         while (si < ms(k)) { out(ms(k) + si - 1, j) = math.sin(om(si) * t); si += 1 }
       }
       j += 1
-    }
-    out
-  }
-
-  private def lowerSolve(l: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] = {
-    val out = v.copy
-    var i = 0
-    while (i < l.rows) {
-      var ss = out(i)
-      var j = 0
-      while (j < i) { ss -= l(i, j) * out(j); j += 1 }
-      out(i) = ss / l(i, i)
-      i += 1
-    }
-    out
-  }
-
-  private def lowerSolve(l: DenseMatrix[Double], bMat: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val out = bMat.copy
-    var cIdx = 0
-    while (cIdx < bMat.cols) {
-      var i = 0
-      while (i < l.rows) {
-        var ss = out(i, cIdx)
-        var j = 0
-        while (j < i) { ss -= l(i, j) * out(j, cIdx); j += 1 }
-        out(i, cIdx) = ss / l(i, i)
-        i += 1
-      }
-      cIdx += 1
     }
     out
   }

@@ -22,17 +22,6 @@ private[sources] object GridAxes {
       row.getLong(dimCols.length))
   }
 
-  /** Explicit-lifetime variant of [[withPersisted]] for writers whose
-    * input reuse does not nest cleanly in one block.
-    */
-  private[sources] class Scope(df: DataFrame) {
-    private val own = df.storageLevel == StorageLevel.NONE
-    if (own) df.persist(StorageLevel.MEMORY_AND_DISK)
-    def axesAndCount(dimCols: Seq[String]): (Seq[Array[Double]], Long) =
-      GridAxes.axesAndCount(df, dimCols)
-    def close(): Unit = if (own) df.unpersist(false)
-  }
-
   /** Run `body` with `df` persisted unless the caller already persisted it:
     * the sinks read their input twice (axis/count pass + write pass), and
     * the input is usually a small aggregated grid whose upstream plan is

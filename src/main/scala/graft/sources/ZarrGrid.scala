@@ -517,6 +517,21 @@ object ZarrGrid extends Serializable {
     }
   }
 
+  /** Chunk files of array `v` under `dir` as (path, key, content), the
+    * key being the path relative to the array directory. Metadata
+    * (`zarr.json`, v2 dot-files) and hidden entries are dropped by the KEY,
+    * so a store below a dot-directory (e.g. `/home/u/.cache/grid.zarr`)
+    * still reads.
+    */
+  private def chunkFiles(spark: SparkSession, dir: String, v: String): DataFrame = {
+    val key = substring_index(col("path"), s"/$v/", -1)
+    spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true").load(s"$dir/$v")
+      .select(col("path"), key.as("key"), col("content"))
+      .filter(!col("key").startsWith(".") && !col("key").contains("/.") &&
+        !col("key").endsWith("zarr.json"))
+  }
+
   private def readChunkFile(conf: org.apache.hadoop.conf.Configuration,
                             path: String): Option[Array[Byte]] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -589,16 +604,13 @@ object ZarrGrid extends Serializable {
         } yield Row.fromSeq(
           xsB(cj * cc + j) +: ysB(ci * cr + i) +: all.map(_(i * cc + j)))
 
-      val scanned = spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true").load(s"$dir/$v0")
-        .filter(!col("path").contains("/.") && !col("path").endsWith("zarr.json"))
-        .select(col("path"), col("content"))
+      val scanned = chunkFiles(spark, dir, v0)
         .flatMap { r =>
           val path = r.getString(0)
-          val rel = path.substring(path.lastIndexOf(s"/$v0/") + v0.length + 2)
+          val rel = r.getString(1)
           val (ci, cj) = parseChunkIdx(metasB(v0), rel, path)
           // first variable's chunk from the scan; siblings opened in-task
-          val all = decodeChunk(r.getAs[Array[Byte]](1), metasB(v0), v0) +:
+          val all = decodeChunk(r.getAs[Array[Byte]](2), metasB(v0), v0) +:
             others.map(v => siblingChunk(v, ci, cj))
           rowsOf(ci, cj, all)
         }(enc)
@@ -639,15 +651,12 @@ object ZarrGrid extends Serializable {
             i <- (0 until cr).iterator if ci * cr + i < ysB.length
             j <- (0 until cc).iterator if cj * cc + j < xsB.length
           } yield Row(xsB(cj * cc + j), ysB(ci * cr + i), vals(i * cc + j))
-        val scanned = spark.read.format("binaryFile")
-          .option("recursiveFileLookup", "true").load(s"$dir/$v")
-          .filter(!col("path").contains("/."))
-          .select(col("path"), col("content"))
+        val scanned = chunkFiles(spark, dir, v)
           .flatMap { r =>
             val path = r.getString(0)
-            val rel = path.substring(path.lastIndexOf(s"/$vName/") + vName.length + 2)
+            val rel = r.getString(1)
             val (ci, cj) = parseChunkIdx(mB, rel, path)
-            rowsOf(ci, cj, decodeChunk(r.getAs[Array[Byte]](1), mB, vName))
+            rowsOf(ci, cj, decodeChunk(r.getAs[Array[Byte]](2), mB, vName))
           }(enc)
         // absent chunk files = fill_value cells (or a loud error)
         val nci = (ysB.length + cr - 1) / cr
@@ -788,15 +797,12 @@ object ZarrGrid extends Serializable {
           case None => fillChunk(metasB(v), v, rel)
         }
       }
-      val scanned = spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true").load(s"$dir/$v0")
-        .filter(!col("path").contains("/.") && !col("path").endsWith("zarr.json"))
-        .select(col("path"), col("content"))
+      val scanned = chunkFiles(spark, dir, v0)
         .flatMap { r =>
           val path = r.getString(0)
-          val rel = path.substring(path.lastIndexOf(s"/$v0/") + v0.length + 2)
+          val rel = r.getString(1)
           val cidx = parseChunkIdxN(metasB(v0), rel, path, rank)
-          val all = decodeChunk(r.getAs[Array[Byte]](1), metasB(v0), v0) +:
+          val all = decodeChunk(r.getAs[Array[Byte]](2), metasB(v0), v0) +:
             others.map(v => siblingChunk(v, cidx))
           rowsOf(metasB(v0), cidx, all)
         }(enc)
@@ -826,15 +832,12 @@ object ZarrGrid extends Serializable {
             StructField(v, DoubleType, nullable = false))
         val enc = org.apache.spark.sql.Encoders.row(schema)
         val mB = m; val vName = v
-        val scanned = spark.read.format("binaryFile")
-          .option("recursiveFileLookup", "true").load(s"$dir/$v")
-          .filter(!col("path").contains("/.") && !col("path").endsWith("zarr.json"))
-          .select(col("path"), col("content"))
+        val scanned = chunkFiles(spark, dir, v)
           .flatMap { r =>
             val path = r.getString(0)
-            val rel = path.substring(path.lastIndexOf(s"/$vName/") + vName.length + 2)
+            val rel = r.getString(1)
             val cidx = parseChunkIdxN(mB, rel, path, rank)
-            rowsOf(mB, cidx, Seq(decodeChunk(r.getAs[Array[Byte]](1), mB, vName)))
+            rowsOf(mB, cidx, Seq(decodeChunk(r.getAs[Array[Byte]](2), mB, vName)))
           }(enc)
         val nPer = (0 until rank).map(i => (shape(i) + m.chunks(i) - 1) / m.chunks(i))
         val expected = nPer.foldLeft(Seq(Seq.empty[Int])) { (acc, n) =>
@@ -1217,67 +1220,69 @@ object ZarrGrid extends Serializable {
     }
     // new dim-0 values + tail-lattice equality (axis-sized driver work),
     // all dims + row count in ONE job (was rank + 1 input passes); input
-    // persisted across the axis pass and the write pass
-    val appendScope = new GridAxes.Scope(df)
-    val (newAxes, total) = appendScope.axesAndCount(dimCols)
-    val newVals = newAxes.head
-    require(newVals.nonEmpty, "nothing to append")
-    val oldSet = oldAxes.head.toSet
-    require(!newVals.exists(oldSet.contains),
-      s"append ${dimCols.head} values overlap the store: ${newVals.filter(oldSet.contains).take(3).mkString(", ")}")
-    dimCols.tail.zipWithIndex.foreach { case (d, i) =>
-      require(java.util.Arrays.equals(newAxes(i + 1), oldAxes(i + 1)),
-        s"append $d axis differs from the store's")
-    }
-    val tailShape = oldAxes.tail.map(_.length)
-    require(total == newVals.length.toLong * tailShape.map(_.toLong).product,
-      s"rows $total != full ${newVals.length} x ${tailShape.mkString(" x ")} lattice")
+    // persisted across the axis pass and the write pass, and unpersisted
+    // even when a check below throws
+    val (newVals, tailShape) = GridAxes.withPersisted(df) {
+      val (newAxes, total) = GridAxes.axesAndCount(df, dimCols)
+      val newVals = newAxes.head
+      require(newVals.nonEmpty, "nothing to append")
+      val oldSet = oldAxes.head.toSet
+      require(!newVals.exists(oldSet.contains), s"append ${dimCols.head} values overlap " +
+        s"the store: ${newVals.filter(oldSet.contains).take(3).mkString(", ")}")
+      dimCols.tail.zipWithIndex.foreach { case (d, i) =>
+        require(java.util.Arrays.equals(newAxes(i + 1), oldAxes(i + 1)),
+          s"append $d axis differs from the store's")
+      }
+      val tailShape = oldAxes.tail.map(_.length)
+      require(total == newVals.length.toLong * tailShape.map(_.toLong).product,
+        s"rows $total != full ${newVals.length} x ${tailShape.mkString(" x ")} lattice")
 
-    // new slice chunks from the executors, indices offset past the store
-    val base = oldAxes.head.length
-    val idxMaps = newVals.zipWithIndex.toMap +: oldAxes.tail.map(_.zipWithIndex.toMap)
-    val sliceSize = tailShape.product
-    val strides = tailShape.scanRight(1)(_ * _).tail.toArray
-    val dirB = dir; val vars = varNames; val compB = comp
-    val v3B = v3; val rankB = rank; val baseB = base
-    val metasB = metas
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    val idxMapsB = idxMaps
-    df.select((dimCols ++ varNames).map(col): _*)
-      .repartition(newVals.length, udfDimIdx(idxMaps.head)(col(dimCols.head)))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        val slices = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
-        rows.foreach { r =>
-          val i0 = idxMapsB.head(r.getDouble(0))
-          var off = 0
-          var d = 1
-          while (d < rankB) { off += idxMapsB(d)(r.getDouble(d)) * strides(d - 1); d += 1 }
-          val sl = slices.getOrElseUpdate(i0,
-            Array.fill(vars.length)(new Array[Double](sliceSize)))
-          var v = 0
-          while (v < vars.length) { sl(v)(off) = r.getDouble(rankB + v); v += 1 }
-        }
-        if (slices.nonEmpty) {
-          val conf = confB.value.value
-          slices.foreach { case (i0, sl) =>
-            vars.indices.foreach { v =>
-              val m = metasB(vars(v))
-              val rel = chunkRelOfN(m, (baseB + i0) +: Seq.fill(rankB - 1)(0))
-              val p = new org.apache.hadoop.fs.Path(s"$dirB/${vars(v)}/$rel")
-              val fsT = rawFs(p.toString, conf)
-              val out = fsT.create(p, true)
-              val payload =
-                if (m.innerChunks.nonEmpty)
-                  encodeShard(doubleLeBytes(sl(v)), m.chunks, m.innerChunks, compB)
-                else encodeChunk(doubleLeBytes(sl(v)), compB, v3B)
-              try out.write(payload) finally out.close()
+      // new slice chunks from the executors, indices offset past the store
+      val base = oldAxes.head.length
+      val idxMaps = newVals.zipWithIndex.toMap +: oldAxes.tail.map(_.zipWithIndex.toMap)
+      val sliceSize = tailShape.product
+      val strides = tailShape.scanRight(1)(_ * _).tail.toArray
+      val dirB = dir; val vars = varNames; val compB = comp
+      val v3B = v3; val rankB = rank; val baseB = base
+      val metasB = metas
+      val confB = spark.sparkContext.broadcast(
+        new org.apache.spark.util.SerializableConfiguration(
+          spark.sessionState.newHadoopConf()))
+      val idxMapsB = idxMaps
+      df.select((dimCols ++ varNames).map(col): _*)
+        .repartition(newVals.length, udfDimIdx(idxMaps.head)(col(dimCols.head)))
+        .foreachPartition { (rows: Iterator[Row]) =>
+          val slices = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
+          rows.foreach { r =>
+            val i0 = idxMapsB.head(r.getDouble(0))
+            var off = 0
+            var d = 1
+            while (d < rankB) { off += idxMapsB(d)(r.getDouble(d)) * strides(d - 1); d += 1 }
+            val sl = slices.getOrElseUpdate(i0,
+              Array.fill(vars.length)(new Array[Double](sliceSize)))
+            var v = 0
+            while (v < vars.length) { sl(v)(off) = r.getDouble(rankB + v); v += 1 }
+          }
+          if (slices.nonEmpty) {
+            val conf = confB.value.value
+            slices.foreach { case (i0, sl) =>
+              vars.indices.foreach { v =>
+                val m = metasB(vars(v))
+                val rel = chunkRelOfN(m, (baseB + i0) +: Seq.fill(rankB - 1)(0))
+                val p = new org.apache.hadoop.fs.Path(s"$dirB/${vars(v)}/$rel")
+                val fsT = rawFs(p.toString, conf)
+                val out = fsT.create(p, true)
+                val payload =
+                  if (m.innerChunks.nonEmpty)
+                    encodeShard(doubleLeBytes(sl(v)), m.chunks, m.innerChunks, compB)
+                  else encodeChunk(doubleLeBytes(sl(v)), compB, v3B)
+                try out.write(payload) finally out.close()
+              }
             }
           }
         }
-      }
-    appendScope.close()
+      (newVals, tailShape)
+    }
 
     // metadata LAST (commit point): grown dim-0 axis + per-array shapes
     val newAxis0 = oldAxes.head ++ newVals

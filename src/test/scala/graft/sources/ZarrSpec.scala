@@ -697,4 +697,38 @@ class ZarrSpec extends AnyFunSuite with SparkTestBase {
       ZarrGrid.readGrid2d(spark, dir, "x", "y", Seq("z")).collect())
     assert(e.getMessage.contains("blosc") || e.getCause.getMessage.contains("blosc"))
   }
+
+  test("a store below a dot-directory reads back in full and windowed") {
+    val cube = mkCube(2.0)
+    val want = cube.collect().map(r =>
+      (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))).toSet
+    for (fmt <- Seq(2, 3)) {
+      val dir = Files.createTempDirectory("zarr_").resolve(".hidden").resolve("cube.zarr").toString
+      ZarrGrid.writeGridNdDistributed(cube, dir, Seq("t", "y", "x"), Seq("v"), zarrFormat = fmt)
+      val back = ZarrGrid.readGridNd(spark, dir, Seq("t", "y", "x"), Seq("v"))
+      assert(back.collect().map(r =>
+        (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))).toSet === want,
+        s"fmt $fmt")
+      val day = ZarrGrid.readGridNdWindow(spark, dir, Seq("t", "y", "x"), Seq("v"),
+        Map("t" -> (1001.0, 1001.0))).collect()
+      assert(day.length === 4 * 5 && day.forall(_.getDouble(0) == 1001.0), s"fmt $fmt")
+    }
+    val dir2 = Files.createTempDirectory("zarr_").resolve(".hidden").resolve("g.zarr").toString
+    ZarrGrid.writeGrid2d(mkGrid(0.5), dir2, "x", "y", Seq("z"), chunkRows = 2)
+    assert(ZarrGrid.readGrid2d(spark, dir2, "x", "y", Seq("z")).count() === 35)
+  }
+
+  test("a rejected append leaves the caller's frame unpersisted") {
+    import spark.implicits._
+    def cube(ts: Seq[Double]) =
+      (for { t <- ts; iy <- 0 until 4; ix <- 0 until 5 }
+        yield (t, 100.0 * iy, 10.0 * ix, t + iy * 10 + ix)).toDF("t", "y", "x", "v")
+    val dir = Files.createTempDirectory("zarr_app_").resolve("p.zarr").toString
+    ZarrGrid.writeGridNdDistributed(cube(Seq(1.0, 2.0)), dir, Seq("t", "y", "x"), Seq("v"))
+    val overlapping = cube(Seq(2.0, 3.0))
+    val e = intercept[IllegalArgumentException](
+      ZarrGrid.appendGridNdDistributed(overlapping, dir, Seq("t", "y", "x"), Seq("v")))
+    assert(e.getMessage.contains("overlap"))
+    assert(overlapping.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+  }
 }
