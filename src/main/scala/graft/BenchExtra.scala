@@ -167,20 +167,17 @@ object BenchExtra {
           val pg = graft.plans.GpSatPipeline.predGrid(spark, cfg)
           val results = t("fit")(
             { val r = graft.plans.LocalExpertOI.run(spark, binned, el, pg, cfg.oi); r.count(); r })
-          val tiles = results.count()
-          val predRows = t("counts") {
+          t("counts") {
             results.filter(_.num_obs < cfg.oi.minObs).count()
             results.toDF().select(org.apache.spark.sql.functions.explode(
               org.apache.spark.sql.functions.col("preds"))).count()
           }
-          def sized(df: org.apache.spark.sql.DataFrame, rows: Long, bytesPerRow: Long) =
-            df.coalesce(math.max(1L, math.min(10000L, rows * bytesPerRow / (128L << 20) + 1)).toInt)
           t("sinks") {
-            store.append("run_details", sized(graft.plans.LocalExpertOI.runDetails(results), tiles, 120))
-            store.append("preds", sized(graft.plans.LocalExpertOI.preds(results), predRows, 80))
-            store.append("lengthscales", sized(graft.plans.LocalExpertOI.lengthscales(results), tiles * 3, 60))
-            store.append("kernel_variance", sized(graft.plans.LocalExpertOI.kernelVariance(results), tiles, 40))
-            store.append("likelihood_variance", sized(graft.plans.LocalExpertOI.likelihoodVariance(results), tiles, 40))
+            store.append("run_details", graft.io.ResultStore.sized(graft.plans.LocalExpertOI.runDetails(results)))
+            store.append("preds", graft.io.ResultStore.sized(graft.plans.LocalExpertOI.preds(results)))
+            store.append("lengthscales", graft.io.ResultStore.sized(graft.plans.LocalExpertOI.lengthscales(results)))
+            store.append("kernel_variance", graft.io.ResultStore.sized(graft.plans.LocalExpertOI.kernelVariance(results)))
+            store.append("likelihood_variance", graft.io.ResultStore.sized(graft.plans.LocalExpertOI.likelihoodVariance(results)))
           }
           results.unpersist()
           t("smooth")(graft.plans.GpSatPipeline.smoothAndRerun(spark, store, binned, pg, cfg))

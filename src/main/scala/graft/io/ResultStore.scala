@@ -17,6 +17,10 @@ import scala.jdk.CollectionConverters._
   * Iceberg (`df.writeTo(tbl).append()`, snapshot summary = run-info);
   * nothing upstream depends on the storage engine — resume is a left-anti
   * join against the `run_details` TABLE, not against files.
+  *
+  * Output sizing is one rule, [[ResultStore.sized]], which every pipeline
+  * write goes through; `append`/`overwrite` themselves write the layout they
+  * are given.
   */
 final class ResultStore(spark: SparkSession, root: String) {
   Files.createDirectories(Paths.get(root))
@@ -218,7 +222,7 @@ final class ResultStore(spark: SparkSession, root: String) {
     * to a pre-compaction snapshot raises the documented expired-snapshot
     * error — exactly Iceberg's expire behavior.
     */
-  def compact(name: String, targetFileBytes: Long = 128L * 1024 * 1024,
+  def compact(name: String, targetFileBytes: Long = ResultStore.TargetFileBytes,
               runInfo: Map[String, String] = Map.empty): Long = {
     val t0 = System.currentTimeMillis()
     val before = dataFiles(name)
@@ -322,5 +326,27 @@ final class ResultStore(spark: SparkSession, root: String) {
         .toDF("idx", "datetime", "config"))
       0
     }
+  }
+}
+
+object ResultStore {
+
+  /** Target size of one written data file. */
+  val TargetFileBytes: Long = 128L << 20
+
+  /** The output-sizing rule: coalesce `df` to ceil(estimated bytes /
+    * [[TargetFileBytes]]) partitions, so a result table is committed as
+    * right-sized files rather than one file per input partition (each of
+    * which the manifest then footer-reads). The estimate is the optimized
+    * plan's `sizeInBytes`, exact for a materialised cache; materialise the
+    * frame before sizing it. `coalesce` never adds partitions, so a frame
+    * whose estimate is large, or unknown, keeps its layout. The coalesce
+    * sits above the frame's own plan: `spark_partition_id()` in it still
+    * reads the partitions the rows were computed in.
+    */
+  def sized(df: DataFrame): DataFrame = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val files = ((bytes + TargetFileBytes - 1) / TargetFileBytes).max(1).min(Int.MaxValue)
+    df.coalesce(files.toInt)
   }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import graft.io.ResultStore
 import graft.operators.{Binning, Grids, Postprocess}
 import graft.sources.ObsDocs
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The full reference pipeline (examples/inline_example.py) as one
@@ -90,18 +90,13 @@ object GpSatPipeline {
 
     val skipped = results.filter(_.num_obs < cfg.oi.minObs).count()
     val predRows = results.toDF().select(explode(col("preds"))).count()
-    // result tables inherit the fit cogroup's shuffle-partition count;
-    // written as-is each snapshot sprays one KB-sized parquet file per
-    // partition (and the store manifest then footer-reads every one).
-    // Coalesce to ~128 MB target files from the KNOWN row counts
-    // (guide §6 output sizing) — the counts above are needed anyway.
-    def sized(df: DataFrame, rows: Long, bytesPerRow: Long): DataFrame =
-      df.coalesce(math.max(1L, math.min(10000L, rows * bytesPerRow / (128L << 20) + 1)).toInt)
-    store.append("run_details", sized(LocalExpertOI.runDetails(results), tiles, 120))
-    store.append("preds", sized(LocalExpertOI.preds(results), predRows, 80))
-    store.append("lengthscales", sized(LocalExpertOI.lengthscales(results), tiles * 3, 60))
-    store.append("kernel_variance", sized(LocalExpertOI.kernelVariance(results), tiles, 40))
-    store.append("likelihood_variance", sized(LocalExpertOI.likelihoodVariance(results), tiles, 40))
+    // result tables inherit the fit cogroup's partitions; the counts above
+    // materialised them, so each sink's size estimate is exact
+    store.append("run_details", ResultStore.sized(LocalExpertOI.runDetails(results)))
+    store.append("preds", ResultStore.sized(LocalExpertOI.preds(results)))
+    store.append("lengthscales", ResultStore.sized(LocalExpertOI.lengthscales(results)))
+    store.append("kernel_variance", ResultStore.sized(LocalExpertOI.kernelVariance(results)))
+    store.append("likelihood_variance", ResultStore.sized(LocalExpertOI.likelihoodVariance(results)))
     results.unpersist()
 
     if (smooth) smoothAndRerun(spark, store, binned, pg, cfg)
@@ -112,6 +107,18 @@ object GpSatPipeline {
   /** Smoothing + predict-only rerun (inline_example.py:430-520): smooth each
     * hyperparameter field across experts, store *_SMOOTHED tables, rerun
     * with optimise=False loading the smoothed parameters, then glue.
+    *
+    * Each intermediate is computed once:
+    *  1. the three fields, stacked into one long frame keyed by field name
+    *     (`_dim_0 = 0` for the scalar ones), are smoothed in ONE
+    *     `smoothHyperparameters` pass and cached;
+    *  2. each `*_SMOOTHED` table is a filter of that cache;
+    *  3. one `groupBy(x, y, t)` over the same cache builds the rerun's
+    *     expert table with loaded parameters (an expert missing from any
+    *     field is dropped), cached before the rerun;
+    *  4. the rerun is materialised, then written; the glue is written last.
+    * All six overwrites go through [[ResultStore.sized]], so each small table
+    * is one file. Everything cached here is released on exit, also on failure.
     */
   def smoothAndRerun(spark: SparkSession, store: ResultStore, binned: DataFrame,
                      pg: DataFrame, cfg: PipelineConfig): Unit = {
@@ -135,47 +142,74 @@ object GpSatPipeline {
     }
   }
 
+  /** The smoothed fields with the smooth_config_dict of the inline example
+    * (inline_example.py:459-474): field, its `_dim_*` column, max clamp.
+    */
+  private val smoothedFields: Seq[(String, Option[String], Option[Double])] = Seq(
+    ("lengthscales", Some("_dim_0"), None),
+    ("kernel_variance", None, Some(0.1)),
+    ("likelihood_variance", None, Some(0.3)))
+
   private def smoothAndRerunInner(spark: SparkSession, store: ResultStore, binned: DataFrame,
                                   pg: DataFrame, cfg: PipelineConfig): Unit = {
     val l = cfg.smoothLengthscale
-    // smooth_config_dict of the inline example: max clamps on variances
-    val lsSm = Postprocess.smoothHyperparameters(store.table("lengthscales"),
-      Postprocess.SmoothConfig("lengthscales", otherDims = Seq("t", "_dim_0"), lX = l, lY = l))
-    val kvSm = Postprocess.smoothHyperparameters(store.table("kernel_variance"),
-      Postprocess.SmoothConfig("kernel_variance", otherDims = Seq("t"), lX = l, lY = l, maxVal = Some(0.1)))
-    val lvSm = Postprocess.smoothHyperparameters(store.table("likelihood_variance"),
-      Postprocess.SmoothConfig("likelihood_variance", otherDims = Seq("t"), lX = l, lY = l, maxVal = Some(0.3)))
-    store.overwrite("lengthscales_SMOOTHED", lsSm)
-    store.overwrite("kernel_variance_SMOOTHED", kvSm)
-    store.overwrite("likelihood_variance_SMOOTHED", lvSm)
+    val cached = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def materialised[T](ds: Dataset[T]): Dataset[T] = {
+      cached += ds.persist()
+      ds.count()
+      ds
+    }
+    def clamp(v: Column, cap: Option[Double]): Column = cap.fold(v)(m => least(v, lit(m)))
+    try {
+      // clamped before smoothing as smoothHyperparameters clamps, NaN kept
+      // so that NaN sources are skipped
+      val stacked = smoothedFields.map { case (f, dim, cap) =>
+        store.table(f).select(col("x"), col("y"), col("t"), lit(f).as("field"),
+          dim.fold(lit(0))(col).as("_dim_0"),
+          when(isnan(col(f)), col(f)).otherwise(clamp(col(f), cap)).as("value"))
+      }.reduce(_ unionByName _)
+      // clamped again after smoothing, per field
+      val postClamped = smoothedFields.foldLeft(col("value")) { case (c, (f, _, cap)) =>
+        when(col("field") === f, clamp(col("value"), cap)).otherwise(c)
+      }
+      val smoothed = materialised(Postprocess.smoothHyperparameters(stacked,
+        Postprocess.SmoothConfig("value", otherDims = Seq("field", "t", "_dim_0"), lX = l, lY = l))
+        .withColumn("value", postClamped))
+      smoothedFields.foreach { case (f, dim, _) =>
+        store.overwrite(f + "_SMOOTHED", ResultStore.sized(smoothed.filter(col("field") === f)
+          .select((Seq(col("x"), col("y"), col("t")) ++ dim.map(col) :+ col("value").as(f)): _*)))
+      }
 
-    // experts with loaded params: _dim_* rows pivoted back to an array
-    val lsArr = lsSm.groupBy("x", "y", "t")
-      .agg(transform(array_sort(collect_list(struct(col("_dim_0"), col("lengthscales")))),
-        s => s.getField("lengthscales")).as("ls"))
-    val withParams = lsArr
-      .join(kvSm.withColumnRenamed("kernel_variance", "kvar"), Seq("x", "y", "t"))
-      .join(lvSm.withColumnRenamed("likelihood_variance", "lvar"), Seq("x", "y", "t"))
+      // experts with loaded params: _dim_* rows back to a sorted array
+      def of(f: String, c: Column): Column = when(col("field") === f, c)
+      val withParams = materialised(smoothed.groupBy("x", "y", "t").agg(
+        transform(array_sort(collect_list(of("lengthscales", struct(col("_dim_0"), col("value"))))),
+          s => s.getField("value")).as("ls"),
+        max(of("kernel_variance", col("value"))).as("kvar"),
+        max(of("likelihood_variance", col("value"))).as("lvar"))
+        .filter(size(col("ls")) > 0 && col("kvar").isNotNull && col("lvar").isNotNull))
 
-    // warmStartRerun: re-OPTIMISE from the smoothed parameters instead of
-    // just evaluating them — the deterministic, parallel re-design of the
-    // reference's EMA warm-start (local_experts.py consumes previously
-    // fitted experts' params in visit order, which is order-dependent and
-    // unparallelisable; initialising every tile from the SMOOTHED field
-    // gives each fit the same neighborhood information with no ordering)
-    val rerun = LocalExpertOI.run(spark, binned, withParams, pg,
-      cfg.oi.copy(optimise = cfg.warmStartRerun))
-    store.overwrite("preds_SMOOTHED", LocalExpertOI.preds(rerun))
-    store.overwrite("run_details_SMOOTHED", LocalExpertOI.runDetails(rerun))
-    rerun.unpersist()
+      // warmStartRerun: re-OPTIMISE from the smoothed parameters instead of
+      // just evaluating them — the deterministic, parallel re-design of the
+      // reference's EMA warm-start (local_experts.py consumes previously
+      // fitted experts' params in visit order, which is order-dependent and
+      // unparallelisable; initialising every tile from the SMOOTHED field
+      // gives each fit the same neighborhood information with no ordering)
+      val rerun = LocalExpertOI.run(spark, binned, withParams, pg,
+        cfg.oi.copy(optimise = cfg.warmStartRerun))
+      cached += rerun
+      rerun.count()
+      store.overwrite("preds_SMOOTHED", ResultStore.sized(LocalExpertOI.preds(rerun)))
+      store.overwrite("run_details_SMOOTHED", ResultStore.sized(LocalExpertOI.runDetails(rerun)))
 
-    // glue overlapping predictions (inference_radius / 2 lengthscale,
-    // inline_example.py:527-534)
-    val glued = Postprocess.getWeightedValues(store.table("preds_SMOOTHED"),
-      refCols = Seq("pred_loc_x", "pred_loc_y", "pred_loc_t"),
-      distToCols = Seq("x", "y", "t"),
-      valCols = Seq("f*", "f*_var"),
-      lengthscale = cfg.oi.inferenceRadius / 2)
-    store.overwrite("preds_glued", glued)
+      // glue overlapping predictions (inference_radius / 2 lengthscale,
+      // inline_example.py:527-534)
+      val glued = Postprocess.getWeightedValues(store.table("preds_SMOOTHED"),
+        refCols = Seq("pred_loc_x", "pred_loc_y", "pred_loc_t"),
+        distToCols = Seq("x", "y", "t"),
+        valCols = Seq("f*", "f*_var"),
+        lengthscale = cfg.oi.inferenceRadius / 2)
+      store.overwrite("preds_glued", ResultStore.sized(glued))
+    } finally cached.foreach(_.unpersist())
   }
 }

@@ -131,4 +131,32 @@ class ResultStoreSnapshotSpec extends AnyFunSuite with SparkTestBase {
     assert(store.table("t").count() === 201L)
   }
 
+  private def logLine(id: Option[Long]): String =
+    "{" + id.fold("")(i => s""""snapshot_id":"$i",""") +
+      """"table":"t","mode":"append","ts_ms":"1","wall_ms":"0","files":[]}"""
+
+  private def writeLog(dir: String, lines: Seq[String]): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_snapshots.jsonl"),
+      lines.map(_ + "\n").mkString.getBytes)
+
+  test("snapshot ids continue across ResultStore instances on one root") {
+    import spark.implicits._
+    val dir = tmp()
+    val df = Seq((1L, "a")).toDF("id", "v")
+    assert(new ResultStore(spark, dir).append("t", df) === 0L)
+    assert(new ResultStore(spark, dir).append("t", df) === 1L)
+    assert(new ResultStore(spark, dir).overwrite("u", df) === 2L)
+    assert(new ResultStore(spark, dir).snapshots().map(_.id) === Seq(0L, 1L, 2L))
+  }
+
+  test("snapshot ids continue after a legacy line without snapshot_id") {
+    import spark.implicits._
+    val dir = tmp()
+    // legacy lines are numbered by their index among non-empty lines
+    writeLog(dir, Seq(logLine(Some(0L)), logLine(Some(1L)), logLine(None), ""))
+    val store = new ResultStore(spark, dir)
+    assert(store.append("t", Seq((1L, "a")).toDF("id", "v")) === 3L)
+    assert(store.append("t", Seq((2L, "b")).toDF("id", "v")) === 4L)
+    assert(store.snapshots().map(_.id) === Seq(0L, 1L, 2L, 3L, 4L))
+  }
 }
