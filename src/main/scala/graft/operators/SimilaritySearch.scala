@@ -150,9 +150,10 @@ object SimilaritySearch {
     val (centIds, centVecs) = collectCents(centroidArr)
     val outSchema = StructType(Seq(
       it.schema.head, StructField("cluster_id", listIdType(centroidArr))))
+    val dim = centVecs.headOption.fold(0)(_.length)
     it.mapPartitions { rows =>
       rows.map { r =>
-        val bi = nearestIdxKernel(centVecs, r.getSeq[Double](1).toArray)
+        val bi = nearestIdxKernel(centVecs, vectorAt(r, vecCol, dim))
         Row(r.get(0), if (bi < 0) Long.MaxValue else centIds(bi))
       }
     }(Encoders.row(outSchema))
@@ -172,9 +173,10 @@ object SimilaritySearch {
     val (centIds, centVecs) = collectCents(centroidArr)
     val assignedSchema = StructType(
       it.schema.fields.toSeq :+ StructField("list_id", listIdType(centroidArr)))
+    val dim = centVecs.headOption.fold(0)(_.length)
     val assigned = it.mapPartitions { rows =>
       rows.map { r =>
-        val bi = nearestIdxKernel(centVecs, r.getSeq[Double](1).toArray)
+        val bi = nearestIdxKernel(centVecs, vectorAt(r, vecCol, dim))
         Row(r.get(0), r.get(1), if (bi < 0) Long.MaxValue else centIds(bi))
       }
     }(Encoders.row(assignedSchema))
@@ -255,6 +257,36 @@ object SimilaritySearch {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  /** The embedding in column 1 of an encode-kernel input row. It must be
+    * a non-null vector with no null elements: the double cast keeps
+    * nulls, and unboxing would silently read a null element as 0.0.
+    * Messages name the caller's column and the dimension `dim` expected.
+    */
+  private def vectorAt(r: Row, vecCol: String, dim: Int): Array[Double] = {
+    val s = r.getSeq[Any](1)
+    require(s != null,
+      s"$vecCol: null embedding vector for item ${r.get(0)} (expected $dim doubles)")
+    val out = new Array[Double](s.length)
+    val it = s.iterator
+    var i = 0
+    while (it.hasNext) {
+      val x = it.next()
+      require(x != null, s"$vecCol: null element $i in the embedding vector of item " +
+        s"${r.get(0)} (expected $dim doubles)")
+      out(i) = x.asInstanceOf[Double]
+      i += 1
+    }
+    out
+  }
+
+  /** Vector length a PQ codebook encodes: m subspaces x dsub. */
+  private def pqDim(cb: Array[Array[Array[Double]]]): Int = {
+    var d = 0
+    var j = 0
+    while (j < cb.length) { d += cb(j)(0).length; j += 1 }
+    d
+  }
+
   /** [[nearestListStruct]]'s fold: index of the first centroid with
     * strictly greatest cosine (-1 only if `cents` is empty or no length
     * matches — the fold's untouched init).
@@ -276,7 +308,11 @@ object SimilaritySearch {
   /** [[pqCodesExpr]]'s folds: per subspace, argmin squared L2 (strict,
     * ties keep the lower code), sums left-to-right.
     */
-  private def pqCodesKernel(cb: Array[Array[Array[Double]]], vec: Array[Double]): Array[Int] = {
+  private def pqCodesKernel(cb: Array[Array[Array[Double]]], vec: Array[Double],
+                            vecCol: String): Array[Int] = {
+    require(vec.length == pqDim(cb),
+      s"$vecCol: embedding vector of length ${vec.length}, expected ${pqDim(cb)} " +
+        s"(${cb.length} PQ subspaces)")
     val m = cb.length
     val codes = new Array[Int](m)
     var j = 0
@@ -494,13 +530,14 @@ object SimilaritySearch {
     val it = items.select(col(idCol).as("item_id"),
       transform(col(vecCol), x => x.cast("double")).as("ivec"))
     val cb = codebook.map(_.map(_.toArray).toArray).toArray
+    val dim = pqDim(cb)
     val outSchema = StructType(Seq(
       it.schema.head,
       StructField("codes", ArrayType(IntegerType)),
       StructField("recon_norm2", DoubleType)))
     it.mapPartitions { rows =>
       rows.map { r =>
-        val codes = pqCodesKernel(cb, r.getSeq[Double](1).toArray)
+        val codes = pqCodesKernel(cb, vectorAt(r, vecCol, dim), vecCol)
         Row(r.get(0), codes.toSeq, pqReconNorm2Kernel(cb, codes))
       }
     }(Encoders.row(outSchema))
@@ -564,6 +601,7 @@ object SimilaritySearch {
     // (same arithmetic, ~100x the throughput of the expression folds).
     val (centIds, centVecs) = collectCents(centroidArr)
     val cbArr = cb.map(_.map(_.toArray).toArray).toArray
+    val dim = pqDim(cbArr)
     val residualB = residual
     val encSchema = StructType(Seq(
       it.schema.head,
@@ -572,18 +610,18 @@ object SimilaritySearch {
       StructField("recon_norm2", DoubleType)))
     val enc = it.mapPartitions { rows =>
       rows.map { r =>
-        val v = r.getSeq[Double](1).toArray
+        val v = vectorAt(r, vecCol, dim)
         val bi = nearestIdxKernel(centVecs, v)
         val lid: Any = if (bi < 0) Long.MaxValue else centIds(bi)
         if (!residualB) {
-          val codes = pqCodesKernel(cbArr, v)
+          val codes = pqCodesKernel(cbArr, v, vecCol)
           Row(r.get(0), lid, codes.toSeq, pqReconNorm2Kernel(cbArr, codes))
         } else {
           val cvec = if (bi < 0) new Array[Double](v.length) else centVecs(bi)
           val rvec = new Array[Double](v.length)
           var i = 0
           while (i < v.length) { rvec(i) = v(i) - cvec(i); i += 1 }
-          val codes = pqCodesKernel(cbArr, rvec)
+          val codes = pqCodesKernel(cbArr, rvec, vecCol)
           Row(r.get(0), lid, codes.toSeq, pqResidualReconKernel(cbArr, codes, cvec))
         }
       }
@@ -698,7 +736,7 @@ object SimilaritySearch {
       StructField("recon_norm2", DoubleType)))
     it.mapPartitions { rows =>
       rows.map { r =>
-        val codes = sqCodesKernel(r.getSeq[Double](1).toArray, mn, mx)
+        val codes = sqCodesKernel(vectorAt(r, vecCol, mn.length), mn, mx)
         Row(r.get(0), codes.toSeq, sqReconNorm2Kernel(codes, mn, mx))
       }
     }(Encoders.row(outSchema))
@@ -779,7 +817,7 @@ object SimilaritySearch {
       StructField("recon_norm2", DoubleType)))
     val enc = it.mapPartitions { rows =>
       rows.map { r =>
-        val v = r.getSeq[Double](1).toArray
+        val v = vectorAt(r, vecCol, mn.length)
         val bi = nearestIdxKernel(centVecs, v)
         val codes = sqCodesKernel(v, mn, mx)
         Row(r.get(0), if (bi < 0) Long.MaxValue else centIds(bi),

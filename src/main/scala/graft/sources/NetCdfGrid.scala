@@ -10,10 +10,11 @@ import java.nio.file.{Files, Paths}
   * open_dataset -> to_dataframe -> reset_index) and its gridded output sink
   * (dataloader.py:775-780).
   *
-  * Scale shape: granule FILES are the unit of parallelism. `readGrid2d`
-  * scans a path glob with Spark's binaryFile source (one task per granule,
-  * no driver-side I/O), parses each granule with the pure-JVM [[NetCdf3]]
-  * codec inside `flatMap`, and emits the xarray `to_dataframe` row layout:
+  * Scale shape: granule FILES are the unit of parallelism. `readGridNd`
+  * (and `readGrid2d`, its rank-2 case) scans a path glob with Spark's
+  * binaryFile source (one task per granule, no driver-side I/O), parses
+  * each granule with the pure-JVM [[NetCdf3]] codec inside `flatMap`, and
+  * emits the xarray `to_dataframe` row layout:
   * one row per (coord values) with the data variables as columns plus the
   * granule path for provenance. A 100 TB archive of granules reads as
   * one declarative scan -> flatMap pipeline; filters on the emitted
@@ -23,55 +24,16 @@ import java.nio.file.{Files, Paths}
 object NetCdfGrid {
 
   /** Read 2-d (yDim, xDim) double variables from every granule matching
-    * `pathGlob` into rows (source_file, xDim, yDim, vars...). Variables
-    * must be laid out (yDim, xDim) C-order with 1-d coordinate variables
-    * named like their dims — the xarray gridded convention.
-    *
-    * Granules may be classic netCDF-3 (CDF-1/2) OR NetCDF-4: the latter is
-    * an HDF5 container whose variables are root datasets, decoded with
-    * [[Hdf5Lite]] (v0-superblock profile, contiguous or chunked with
-    * gzip/shuffle — the layout `nc_create`/`to_netcdf` default writers
-    * produce; files outside the profile raise errors naming the feature).
+    * `pathGlob` into rows (source_file, xDim, yDim, vars...): the rank-2
+    * case of [[readGridNd]]. Variables must be laid out (yDim, xDim)
+    * C-order with 1-d coordinate variables named like their dims — the
+    * xarray gridded convention. Granules may be classic netCDF-3 or
+    * NetCDF-4/HDF5.
     */
   def readGrid2d(spark: SparkSession, pathGlob: String, xDim: String, yDim: String,
-                 varNames: Seq[String]): DataFrame = {
-    val schema = StructType(
-      StructField("source_file", StringType, nullable = false) +:
-        StructField(xDim, DoubleType, nullable = false) +:
-        StructField(yDim, DoubleType, nullable = false) +:
-        varNames.map(v => StructField(v, DoubleType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val files = spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-    files.flatMap { r =>
-      val path = r.getString(0)
-      val bytes = r.getAs[Array[Byte]](1)
-      // (doubles, shape) accessors over either container format
-      val (readD, shapeOf): (String => Array[Double], String => Seq[Int]) =
-        if (bytes.length >= 4 && (bytes(0) & 0xff) == 0x89 &&
-          bytes(1) == 'H' && bytes(2) == 'D' && bytes(3) == 'F') {
-          val vars = Hdf5Lite.read(bytes).map(v => v.name -> v).toMap
-          def vGet(n: String) = vars.getOrElse(n, throw new IllegalArgumentException(
-            s"$path: no dataset '$n' (present: ${vars.keys.toSeq.sorted.mkString(", ")})"))
-          (n => vGet(n).asDoubles, n => vGet(n).shape)
-        } else {
-          val nc = NetCdf3.parse(bytes)
-          (n => nc.readDoubles(n), n => nc.shape(n))
-        }
-      val xs = readD(xDim)
-      val ys = readD(yDim)
-      val data = varNames.map { v =>
-        require(shapeOf(v) == Seq(ys.length, xs.length),
-          s"$v shape ${shapeOf(v)} != (${ys.length}, ${xs.length})")
-        readD(v)
-      }
-      for {
-        iy <- ys.indices.iterator
-        ix <- xs.indices
-      } yield Row.fromSeq(
-        path +: xs(ix) +: ys(iy) +: data.map(_(iy * xs.length + ix)))
-    }(enc)
-  }
+                 varNames: Seq[String]): DataFrame =
+    readGridNd(spark, pathGlob, Seq(yDim, xDim), varNames)
+      .select((Seq("source_file", xDim, yDim) ++ varNames).map(col): _*)
 
   /** Read rank-R `(d1, ..., dR)` double variables from every granule
     * matching `pathGlob` into long-form rows
@@ -80,26 +42,25 @@ object NetCdfGrid {
     * `xr.open_mfdataset(...).to_dataframe().reset_index()`. Each granule
     * carries its OWN coordinate arrays (a daily-granule archive has a
     * length-1 leading time dim per file), so the union of granule rows
-    * IS the whole cube — granule files stay the unit of parallelism,
-    * and both netCDF-3 and NetCDF-4/HDF5 containers decode in-task.
+    * IS the whole cube — granule files stay the unit of parallelism.
+    * Granules may be classic netCDF-3 (CDF-1/2) OR NetCDF-4: the latter
+    * is an HDF5 container whose variables are root datasets, decoded
+    * in-task with [[Hdf5Lite]] (v0-superblock profile, contiguous or
+    * chunked with gzip/shuffle — the layout `nc_create`/`to_netcdf`
+    * default writers produce; files outside the profile raise errors
+    * naming the feature).
     */
   def readGridNd(spark: SparkSession, pathGlob: String, dims: Seq[String],
                  varNames: Seq[String]): DataFrame = {
     require(dims.nonEmpty && varNames.nonEmpty, "dims and varNames must be non-empty")
-    val rank = dims.length
-    val schema = StructType(
-      StructField("source_file", StringType, nullable = false) +:
-        dims.map(d => StructField(d, DoubleType, nullable = false)) ++:
-        varNames.map(v => StructField(v, DoubleType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
     val files = spark.read.format("binaryFile").load(pathGlob)
       .select(col("path"), col("content"))
     files.flatMap { r =>
       val path = r.getString(0)
       val bytes = r.getAs[Array[Byte]](1)
+      // (doubles, shape) accessors over either container format
       val (readD, shapeOf): (String => Array[Double], String => Seq[Int]) =
-        if (bytes.length >= 4 && (bytes(0) & 0xff) == 0x89 &&
-          bytes(1) == 'H' && bytes(2) == 'D' && bytes(3) == 'F') {
+        if (isHdf5(bytes)) {
           val vars = Hdf5Lite.read(bytes).map(v => v.name -> v).toMap
           def vGet(n: String) = vars.getOrElse(n, throw new IllegalArgumentException(
             s"$path: no dataset '$n' (present: ${vars.keys.toSeq.sorted.mkString(", ")})"))
@@ -115,17 +76,52 @@ object NetCdfGrid {
           s"$path: $v shape ${shapeOf(v)} != $shape = (${dims.mkString(", ")})")
         readD(v)
       }
-      // row-major strides over the granule's own extent
-      val strides = new Array[Int](rank)
-      var s = 1
-      var d = rank - 1
-      while (d >= 0) { strides(d) = s; s *= shape(d); d -= 1 }
-      Iterator.range(0, shape.product).map { p =>
-        val coords = (0 until rank).map(i => axes(i)(p / strides(i) % shape(i)))
-        Row.fromSeq(path +: coords ++: data.map(_(p)))
-      }
-    }(enc)
+      granuleRows(path, axes, null, data)
+    }(granuleEncoder(dims, varNames))
   }
+
+  /** Row encoder of the granule scans: (source_file, dims..., vars...). */
+  private def granuleEncoder(dims: Seq[String], varNames: Seq[String]) =
+    org.apache.spark.sql.Encoders.row(StructType(
+      StructField("source_file", StringType, nullable = false) +:
+        dims.map(d => StructField(d, DoubleType, nullable = false)) ++:
+        varNames.map(v => StructField(v, DoubleType, nullable = false))))
+
+  /** Rows of one decoded granule: an odometer over its row-major cells,
+    * skipping those outside `keeps` (per dim; null keeps every cell).
+    */
+  private def granuleRows(path: String, axes: Seq[Array[Double]],
+                          keeps: Array[Array[Boolean]],
+                          data: Seq[Array[Double]]): Iterator[Row] = {
+    val rank = axes.length
+    val ax = axes.toArray
+    val shape = ax.map(_.length)
+    val strides = new Array[Int](rank)
+    var s = 1
+    var d = rank - 1
+    while (d >= 0) { strides(d) = s; s *= shape(d); d -= 1 }
+    Iterator.range(0, shape.product).flatMap { p =>
+      var ok = true
+      val g = new Array[Int](rank)
+      var i = 0
+      while (i < rank) {
+        g(i) = p / strides(i) % shape(i)
+        if (keeps != null && !keeps(i)(g(i))) ok = false
+        i += 1
+      }
+      if (!ok) None
+      else Some(Row.fromSeq(path +: (0 until rank).map(i => ax(i)(g(i))) ++: data.map(_(p))))
+    }
+  }
+
+  /** Files matching a granule glob; a matched directory contributes the
+    * files directly inside it. */
+  private def granuleFiles(fs: org.apache.hadoop.fs.FileSystem,
+                           pathGlob: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(pathGlob))).getOrElse(Array.empty)
+      .toSeq.flatMap { s =>
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filter(_.isFile) else Seq(s)
+      }
 
   /** Pruning evidence for windowed granule scans (executor-side, so
     * accumulators): files listed, files whose data payload was decoded,
@@ -155,20 +151,9 @@ object NetCdfGrid {
     require(dims.nonEmpty && varNames.nonEmpty, "dims and varNames must be non-empty")
     val unknown = ranges.keySet -- dims.toSet
     require(unknown.isEmpty, s"window ranges on non-dim columns: ${unknown.mkString(", ")}")
-    val rank = dims.length
-    val schema = StructType(
-      StructField("source_file", StringType, nullable = false) +:
-        dims.map(d => StructField(d, DoubleType, nullable = false)) ++:
-        varNames.map(v => StructField(v, DoubleType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
     val hconf = spark.sessionState.newHadoopConf()
-    val gp = new org.apache.hadoop.fs.Path(pathGlob)
-    val gfs = gp.getFileSystem(hconf)
-    val globbed = Option(gfs.globStatus(gp)).getOrElse(Array.empty)
-    val fileList: Seq[(String, Long)] = globbed.toSeq.flatMap { s =>
-      if (s.isDirectory) gfs.listStatus(s.getPath).toSeq.filter(_.isFile)
-      else Seq(s)
-    }.map(s => (s.getPath.toString, s.getLen))
+    val fileList = granuleFiles(new org.apache.hadoop.fs.Path(pathGlob).getFileSystem(hconf),
+      pathGlob).map(s => (s.getPath.toString, s.getLen))
     require(fileList.nonEmpty, s"$pathGlob: no granules matched")
     val filesPlanned = if (stats != null) stats.filesPlanned
       else spark.sparkContext.longAccumulator("nc.filesPlanned")
@@ -178,7 +163,6 @@ object NetCdfGrid {
       else spark.sparkContext.longAccumulator("nc.bytesRead")
     val confB = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(hconf))
-    val dimsB = dims; val varsB = varNames; val rangesB = ranges; val rankB = rank
     import spark.implicits._
     spark.createDataset(fileList)
       .repartition(math.min(fileList.size, 32))
@@ -188,104 +172,63 @@ object NetCdfGrid {
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(conf)
         def keepsOf(axes: Seq[Array[Double]]): Array[Array[Boolean]] =
-          dimsB.indices.map { i =>
-            rangesB.get(dimsB(i)) match {
+          dims.indices.map { i =>
+            ranges.get(dims(i)) match {
               case Some((lo, hi)) => axes(i).map(v => v >= lo && v <= hi)
               case None => Array.fill(axes(i).length)(true)
             }
           }.toArray
-        def emit(axes: Seq[Array[Double]], keeps: Array[Array[Boolean]],
-                 data: Seq[Array[Double]]): Iterator[Row] = {
-          val shape = axes.map(_.length).toArray
-          val strides = new Array[Int](rankB)
-          var s = 1
-          var d = rankB - 1
-          while (d >= 0) { strides(d) = s; s *= shape(d); d -= 1 }
-          Iterator.range(0, shape.product).flatMap { pI =>
-            var ok = true
-            val g = new Array[Int](rankB)
-            var i = 0
-            while (i < rankB) {
-              g(i) = pI / strides(i) % shape(i)
-              if (!keeps(i)(g(i))) ok = false
-              i += 1
-            }
-            if (!ok) None
-            else Some(Row.fromSeq(
-              path +: (0 until rankB).map(i => axes(i)(g(i))) ++: data.map(_(pI))))
-          }
-        }
         val in = fs.open(p)
         try {
-          // container sniff from the first 4 bytes
-          val magic = new Array[Byte](math.min(4, fileLen).toInt)
-          in.readFully(0, magic, 0, magic.length)
-          val isHdf5 = magic.length == 4 && (magic(0) & 0xff) == 0x89 &&
-            magic(1) == 'H' && magic(2) == 'D' && magic(3) == 'F'
-          if (isHdf5) {
+          if (sniffHdf5(in, fileLen)) {
             // NetCDF-4: the HDF5 B-tree walk needs the file — read fully,
             // but decode ONLY the coordinate datasets unless in-window
             val bytes = new Array[Byte](fileLen.toInt)
             in.readFully(0, bytes, 0, bytes.length)
             bytesAcc.add(fileLen)
-            val dimSet = dimsB.toSet
+            val dimSet = dims.toSet
             val coords = Hdf5Lite.read(bytes, dimSet.contains).map(v => v.name -> v).toMap
-            val axes = dimsB.map(d => coords.getOrElse(d, throw new IllegalArgumentException(
+            val axes = dims.map(d => coords.getOrElse(d, throw new IllegalArgumentException(
               s"$path: no dataset '$d'")).asDoubles)
             val keeps = keepsOf(axes)
             if (keeps.exists(!_.exists(identity))) Iterator.empty
             else {
               filesRead.add(1L)
-              val want = dimSet ++ varsB
+              val want = dimSet ++ varNames
               val vars = Hdf5Lite.read(bytes, want.contains).map(v => v.name -> v).toMap
               val shape = axes.map(_.length)
-              val data = varsB.map { v =>
+              val data = varNames.map { v =>
                 val h = vars.getOrElse(v, throw new IllegalArgumentException(
                   s"$path: no dataset '$v'"))
                 require(h.shape == shape, s"$path: $v shape ${h.shape} != $shape")
                 h.asDoubles
               }
-              emit(axes, keeps, data)
+              granuleRows(path, axes, keeps, data)
             }
           } else {
-            // classic CDF: ranged reads — header chunk (grow on demand),
-            // then only the variables the window needs
-            var chunk = math.min(fileLen, 8192L).toInt
-            var nc: NetCdf3.NcFile = null
-            while (nc == null) {
-              val head = new Array[Byte](chunk)
-              in.readFully(0, head, 0, chunk)
-              try nc = NetCdf3.parse(head)
-              catch {
-                case _: java.nio.BufferUnderflowException | _: IndexOutOfBoundsException
-                  if chunk < fileLen =>
-                  chunk = math.min(fileLen, chunk * 8L).toInt
-              }
+            // classic CDF: ranged reads — the header, then only the
+            // variables the window needs
+            val (nc, headLen) = rangedHeader(in, fileLen)
+            bytesAcc.add(headLen.toLong)
+            def ranged(name: String): Array[Double] = {
+              bytesAcc.add(nc.variable(name).vsize)
+              rangedVar(in, nc, name)
             }
-            bytesAcc.add(chunk.toLong)
-            def rangedVar(name: String): Array[Double] = {
-              val v = nc.variable(name)
-              val n = nc.shape(name).foldLeft(1L)(_ * _).toInt
-              val raw = new Array[Byte](v.vsize.toInt)
-              in.readFully(v.begin, raw, 0, raw.length)
-              bytesAcc.add(v.vsize)
-              NetCdf3.decodeDoubles(v.ncType, n, raw, 0, raw.length)
-            }
-            val axes = dimsB.map(rangedVar)
+            val axes = dims.map(ranged)
             val keeps = keepsOf(axes)
             if (keeps.exists(!_.exists(identity))) Iterator.empty
             else {
               filesRead.add(1L)
               val shape = axes.map(_.length)
-              val data = varsB.map { v =>
+              val data = varNames.map { v =>
                 require(nc.shape(v) == shape, s"$path: $v shape ${nc.shape(v)} != $shape")
-                rangedVar(v)
+                ranged(v)
               }
-              emit(axes, keeps, data)
+              granuleRows(path, axes, keeps, data)
             }
           }
         } finally in.close()
-      }(enc)
+      }(granuleEncoder(dims, varNames))
   }
 
   /** Discover (dims in C-order, data variable names) from the FIRST
@@ -297,38 +240,19 @@ object NetCdfGrid {
     * granules raise — pass dims/vars explicitly to [[readGridNd]] there.
     */
   def granuleLayout(spark: SparkSession, pathGlob: String): (Seq[String], Seq[String]) = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val gp = new org.apache.hadoop.fs.Path(pathGlob)
-    val gfs = gp.getFileSystem(hconf)
-    val globbed = Option(gfs.globStatus(gp)).getOrElse(Array.empty)
-    val first = globbed.toSeq.flatMap { s =>
-      if (s.isDirectory) gfs.listStatus(s.getPath).toSeq.filter(_.isFile) else Seq(s)
-    }.sortBy(_.getPath.toString).headOption.getOrElse(
+    val gfs = new org.apache.hadoop.fs.Path(pathGlob)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val first = granuleFiles(gfs, pathGlob).sortBy(_.getPath.toString).headOption.getOrElse(
       throw new IllegalArgumentException(s"$pathGlob: no granules matched"))
     val p = first.getPath
     val len = first.getLen
     val in = gfs.open(p)
     val nc =
       try {
-        val magic = new Array[Byte](math.min(4, len).toInt)
-        in.readFully(0, magic, 0, magic.length)
-        require(!(magic.length == 4 && (magic(0) & 0xff) == 0x89 &&
-          magic(1) == 'H' && magic(2) == 'D' && magic(3) == 'F'),
+        require(!sniffHdf5(in, len),
           s"$p: NetCDF-4/HDF5 granule — layout discovery needs classic CDF; " +
             "pass dims/vars explicitly to readGridNd")
-        var chunk = math.min(len, 8192L).toInt
-        var parsed: NetCdf3.NcFile = null
-        while (parsed == null) {
-          val head = new Array[Byte](chunk)
-          in.readFully(0, head, 0, chunk)
-          try parsed = NetCdf3.parse(head)
-          catch {
-            case _: java.nio.BufferUnderflowException | _: IndexOutOfBoundsException
-              if chunk < len =>
-              chunk = math.min(len, chunk * 8L).toInt
-          }
-        }
-        parsed
+        rangedHeader(in, len)._1
       } finally in.close()
     val dimNames = nc.dims.map(d => d.name)
     val maxRank = nc.vars.map(v => v.dimIds.length).foldLeft(0)(math.max)
@@ -358,10 +282,8 @@ object NetCdfGrid {
                              gattrs: Map[String, String] = Map.empty): Unit = {
     require(dimCols.length >= 2, s"need >= 2 dims, got $dimCols")
     GridAxes.withPersisted(df) {
-      // all axes + row count in ONE job (was rank + 1 input passes)
       val (axes, total) = GridAxes.axesAndCount(df, dimCols)
-      writeSlices(df, dir, dimCols, valCols, gattrs, axes, indexOffset = 0,
-        totalRows = total)
+      writeSlices(df, dir, dimCols, valCols, gattrs, axes, 0, total, bandRows = 1)
     }
   }
 
@@ -391,25 +313,8 @@ object NetCdfGrid {
         val p = new org.apache.hadoop.fs.Path(pathStr)
         val tfs = p.getFileSystem(conf)
         val in = tfs.open(p)
-        try {
-          var chunk = math.min(fileLen, 8192L).toInt
-          var nc: NetCdf3.NcFile = null
-          while (nc == null) {
-            val head = new Array[Byte](chunk)
-            in.readFully(0, head, 0, chunk)
-            try nc = NetCdf3.parse(head)
-            catch {
-              case _: java.nio.BufferUnderflowException | _: IndexOutOfBoundsException
-                if chunk < fileLen =>
-                chunk = math.min(fileLen, chunk * 8L).toInt
-            }
-          }
-          val v = nc.variable(d0Col)
-          val n = nc.shape(d0Col).foldLeft(1L)(_ * _).toInt
-          val raw = new Array[Byte](v.vsize.toInt)
-          in.readFully(v.begin, raw, 0, raw.length)
-          NetCdf3.decodeDoubles(v.ncType, n, raw, 0, raw.length).toSeq
-        } finally in.close()
+        try rangedVar(in, rangedHeader(in, fileLen)._1, d0Col).toSeq
+        finally in.close()
       }.collect().toSet
   }
 
@@ -431,38 +336,16 @@ object NetCdfGrid {
     val existing = fs.listStatus(dp).toSeq.filter(s =>
       s.isFile && s.getPath.getName.endsWith(".nc"))
     require(existing.nonEmpty, s"$dir: no existing granules — use writeGridNdDistributed")
-    // archive metadata via ranged header reads (a few KB per granule —
-    // the same cost as listing; payloads are never fetched)
-    def headerOf(st: org.apache.hadoop.fs.FileStatus): NetCdf3.NcFile = {
-      val in = fs.open(st.getPath)
+    // archive metadata via ranged reads of the first granule (its header
+    // and tail coordinates, a few KB; payloads are never fetched)
+    val first = existing.minBy(_.getPath.getName)
+    val tailAxes = {
+      val in = fs.open(first.getPath)
       try {
-        var chunk = math.min(st.getLen, 8192L).toInt
-        var parsed: NetCdf3.NcFile = null
-        while (parsed == null) {
-          val head = new Array[Byte](chunk)
-          in.readFully(0, head, 0, chunk)
-          try parsed = NetCdf3.parse(head)
-          catch {
-            case _: java.nio.BufferUnderflowException | _: IndexOutOfBoundsException
-              if chunk < st.getLen =>
-              chunk = math.min(st.getLen, chunk * 8L).toInt
-          }
-        }
-        parsed
+        val nc = rangedHeader(in, first.getLen)._1
+        dimCols.tail.map(d => rangedVar(in, nc, d))
       } finally in.close()
     }
-    def rangedCoord(st: org.apache.hadoop.fs.FileStatus, nc: NetCdf3.NcFile,
-                    name: String): Array[Double] = {
-      val v = nc.variable(name)
-      val n = nc.shape(name).foldLeft(1L)(_ * _).toInt
-      val raw = new Array[Byte](v.vsize.toInt)
-      val in = fs.open(st.getPath)
-      try in.readFully(v.begin, raw, 0, raw.length) finally in.close()
-      NetCdf3.decodeDoubles(v.ncType, n, raw, 0, raw.length)
-    }
-    val first = existing.minBy(_.getPath.getName)
-    val firstNc = headerOf(first)
-    val tailAxes = dimCols.tail.map(d => rangedCoord(first, firstNc, d))
     GridAxes.withPersisted(df) {
       // all dims + row count in ONE job (was rank + 1 input passes)
       val (newAxes, total) = GridAxes.axesAndCount(df, dimCols)
@@ -481,58 +364,69 @@ object NetCdfGrid {
         case (m, partRe(n)) => math.max(m, n.toInt)
         case (m, _) => m
       } + 1
-      writeSlices(df, dir, dimCols, valCols, gattrs, newVals +: tailAxes, offset,
-        totalRows = total)
+      writeSlices(df, dir, dimCols, valCols, gattrs, newVals +: tailAxes, offset, total,
+        bandRows = 1)
     }
   }
 
+  /** The executor granule writer of every distributed netCDF sink: rows
+    * of (dims..., vars...) hash-partition by band of `bandRows` first-dim
+    * values; each band becomes one complete CDF-1 granule
+    * `dir/part-(indexOffset + band).nc` whose first dim is the band's
+    * length (the last band may be shorter) with the band's slice of axis
+    * 0 as its coordinate, plus the full tail axes. Rows must cover the
+    * `axes` lattice exactly once (`totalRows`, counted by the caller).
+    */
   private def writeSlices(df: DataFrame, dir: String, dimCols: Seq[String],
                           valCols: Seq[String], gattrs: Map[String, String],
-                          axes: Seq[Array[Double]], indexOffset: Int,
-                          totalRows: Long = -1L): Unit = {
+                          axes: Seq[Array[Double]], indexOffset: Int, totalRows: Long,
+                          bandRows: Int): Unit = {
     val spark = df.sparkSession
     val rank = dimCols.length
     val shape = axes.map(_.length)
-    val total = if (totalRows >= 0) totalRows else df.count()
-    require(total == shape.map(_.toLong).product,
-      s"rows $total != full ${shape.mkString(" x ")} lattice (duplicates or gaps)")
-    val idxMaps = axes.map(_.zipWithIndex.toMap)
+    require(totalRows == shape.map(_.toLong).product,
+      s"rows $totalRows != full ${shape.mkString(" x ")} lattice (duplicates or gaps)")
+    require(totalRows > 0, "no rows to write")
+    val idxMaps = axes.map(_.zipWithIndex.toMap).toArray
+    val axis0 = axes.head
+    val br = math.min(bandRows, axis0.length)
     val sliceSize = shape.tail.product
     val strides = shape.tail.scanRight(1)(_ * _).tail.toArray
-    val dirB = dir; val vars = valCols; val dimsB = dimCols
-    val axesB = axes; val gattrsB = gattrs; val rankB = rank
-    val offB = indexOffset
+    val vars = valCols.toArray
+    val tailDims = dimCols.tail.zip(axes.tail)
     val confB = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf()))
-    val idxMapsB = idxMaps
-    val sliceOf = udf((v: Double) => idxMaps.head(v))
+    val bandOf = udf((v: Double) => idxMaps(0)(v) / br)
     df.select((dimCols ++ valCols).map(col): _*)
-      .repartition(shape.head, sliceOf(col(dimCols.head)))
+      .repartition((axis0.length + br - 1) / br, bandOf(col(dimCols.head)))
       .foreachPartition { (rows: Iterator[Row]) =>
-        val slices = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
+        // assemble this partition's bands (hash may co-locate several)
+        def bandLen(b: Int): Int = math.min(br, axis0.length - b * br)
+        val bands = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
         rows.foreach { r =>
-          val i0 = idxMapsB.head(r.getDouble(0))
-          var off = 0
+          val i0 = idxMaps(0)(r.getDouble(0))
+          val b = i0 / br
+          var off = (i0 - b * br) * sliceSize
           var d = 1
-          while (d < rankB) { off += idxMapsB(d)(r.getDouble(d)) * strides(d - 1); d += 1 }
-          val sl = slices.getOrElseUpdate(i0,
-            Array.fill(vars.length)(new Array[Double](sliceSize)))
+          while (d < rank) { off += idxMaps(d)(r.getDouble(d)) * strides(d - 1); d += 1 }
+          val band = bands.getOrElseUpdate(b,
+            Array.fill(vars.length)(new Array[Double](bandLen(b) * sliceSize)))
           var v = 0
-          while (v < vars.length) { sl(v)(off) = r.getDouble(rankB + v); v += 1 }
+          while (v < vars.length) { band(v)(off) = r.getDouble(rank + v); v += 1 }
         }
-        slices.foreach { case (i0, sl) =>
-          val dims = NetCdf3.NcDim(dimsB.head, 1) +:
-            dimsB.tail.zipWithIndex.map { case (n, i) => NetCdf3.NcDim(n, axesB(i + 1).length) }
+        bands.foreach { case (b, band) =>
+          val lo = b * br
+          val dims = NetCdf3.NcDim(dimCols.head, bandLen(b)) +:
+            tailDims.map { case (n, ax) => NetCdf3.NcDim(n, ax.length) }
           val wvars =
-            NetCdf3.WVar(dimsB.head, Seq(dimsB.head), Array(axesB.head(i0))) +:
-              dimsB.tail.zipWithIndex.map { case (n, i) => NetCdf3.WVar(n, Seq(n), axesB(i + 1)) } ++:
-              vars.zipWithIndex.map { case (v, i) => NetCdf3.WVar(v, dimsB, sl(i)) }
-          val bytes = NetCdf3.write(dims, wvars, gattrsB)
-          val p = new org.apache.hadoop.fs.Path(dirB, f"part-${offB + i0}%05d.nc")
-          val fs = p.getFileSystem(confB.value.value)
-          val out = fs.create(p, true)
-          try out.write(bytes) finally out.close()
+            NetCdf3.WVar(dimCols.head, Seq(dimCols.head),
+              java.util.Arrays.copyOfRange(axis0, lo, lo + bandLen(b))) +:
+              tailDims.map { case (n, ax) => NetCdf3.WVar(n, Seq(n), ax) } ++:
+              vars.indices.map(i => NetCdf3.WVar(vars(i), dimCols, band(i)))
+          val p = new org.apache.hadoop.fs.Path(dir, f"part-${indexOffset + b}%05d.nc")
+          val out = p.getFileSystem(confB.value.value).create(p, true)
+          try out.write(NetCdf3.write(dims, wvars, gattrs)) finally out.close()
         }
       }
   }
@@ -580,68 +474,59 @@ object NetCdfGrid {
     * task. A planet-scale grid exports as embarrassingly parallel granule
     * writes and reads back with [[readGrid2d]] on the `.nc` glob under
     * `dir` — the granule directory IS the xarray `open_mfdataset` layout.
-    * Rows must cover the
-    * full (x, y) lattice exactly once (validated by count, not collect).
+    * Rows must cover the full (x, y) lattice exactly once (validated by
+    * count, not collect).
     */
   def writeGrid2dDistributed(df: DataFrame, dir: String, xCol: String, yCol: String,
                              valCols: Seq[String], bandRows: Int,
                              gattrs: Map[String, String] = Map.empty): Unit = {
     require(bandRows > 0, "bandRows must be positive")
-    val spark = df.sparkSession
     GridAxes.withPersisted(df) {
-    // both axes + row count in ONE job (was 3 input passes)
-    val (axesXY, total) = GridAxes.axesAndCount(df, Seq(xCol, yCol))
-    val xs = axesXY(0)
-    val ys = axesXY(1)
-    require(total == xs.length.toLong * ys.length,
-      s"rows $total != full ${xs.length} x ${ys.length} lattice (duplicates or gaps)")
-    val br = math.min(bandRows, ys.length)
-    val nBands = (ys.length + br - 1) / br
+      val (axes, total) = GridAxes.axesAndCount(df, Seq(yCol, xCol))
+      writeSlices(df, dir, Seq(yCol, xCol), valCols, gattrs, axes, 0, total, bandRows)
+    }
+  }
 
-    val xIdx = xs.zipWithIndex.toMap
-    val yIdx = ys.zipWithIndex.toMap
-    val width = xs.length
-    val dirB = dir; val vars = valCols; val xColB = xCol; val yColB = yCol
-    val gattrsB = gattrs; val ysB = ys; val xsB = xs
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    val bandOf = udf((y: Double) => yIdx(y) / br)
-    df.select((Seq(xCol, yCol) ++ valCols).map(col): _*)
-      .repartition(nBands, bandOf(col(yCol)))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        // assemble this partition's band grids (hash may co-locate several)
-        val bands = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
-        rows.foreach { r =>
-          val ix = xIdx(r.getDouble(0))
-          val iy = yIdx(r.getDouble(1))
-          val ci = iy / br
-          val bandLen = math.min(br, ysB.length - ci * br)
-          val band = bands.getOrElseUpdate(ci,
-            Array.fill(vars.length)(new Array[Double](bandLen * width)))
-          var v = 0
-          while (v < vars.length) {
-            band(v)((iy - ci * br) * width + ix) = r.getDouble(2 + v)
-            v += 1
-          }
-        }
-        bands.foreach { case (ci, band) =>
-          val bandLen = math.min(br, ysB.length - ci * br)
-          val ySlice = java.util.Arrays.copyOfRange(ysB, ci * br, ci * br + bandLen)
-          val dims = Seq(NetCdf3.NcDim(yColB, bandLen), NetCdf3.NcDim(xColB, width))
-          val wvars =
-            NetCdf3.WVar(yColB, Seq(yColB), ySlice) +:
-              NetCdf3.WVar(xColB, Seq(xColB), xsB) +:
-              vars.zipWithIndex.map { case (v, i) =>
-                NetCdf3.WVar(v, Seq(yColB, xColB), band(i))
-              }
-          val bytes = NetCdf3.write(dims, wvars, gattrsB)
-          val p = new org.apache.hadoop.fs.Path(dirB, f"part-$ci%05d.nc")
-          val fs = p.getFileSystem(confB.value.value)
-          val out = fs.create(p, true)
-          try out.write(bytes) finally out.close()
-        }
+  /** HDF5 magic (`\x89HDF`) at the start of `head`: a NetCDF-4 granule. */
+  private def isHdf5(head: Array[Byte]): Boolean =
+    head.length >= 4 && (head(0) & 0xff) == 0x89 &&
+      head(1) == 'H' && head(2) == 'D' && head(3) == 'F'
+
+  /** [[isHdf5]] on the first 4 bytes of an open granule. */
+  private def sniffHdf5(in: org.apache.hadoop.fs.FSDataInputStream, fileLen: Long): Boolean = {
+    val magic = new Array[Byte](math.min(4, fileLen).toInt)
+    in.readFully(0, magic, 0, magic.length)
+    isHdf5(magic)
+  }
+
+  /** Classic-CDF header of an open granule by ranged reads: 8 KB first,
+    * growing 8x until the header parses (never past the file). Returns
+    * the header and the bytes fetched.
+    */
+  private def rangedHeader(in: org.apache.hadoop.fs.FSDataInputStream,
+                           fileLen: Long): (NetCdf3.NcFile, Int) = {
+    var chunk = math.min(fileLen, 8192L).toInt
+    var nc: NetCdf3.NcFile = null
+    while (nc == null) {
+      val head = new Array[Byte](chunk)
+      in.readFully(0, head, 0, chunk)
+      try nc = NetCdf3.parse(head)
+      catch {
+        case _: java.nio.BufferUnderflowException | _: IndexOutOfBoundsException
+          if chunk < fileLen =>
+          chunk = math.min(fileLen, chunk * 8L).toInt
       }
     }
+    (nc, chunk)
+  }
+
+  /** One variable's doubles by a ranged read of its payload. */
+  private def rangedVar(in: org.apache.hadoop.fs.FSDataInputStream, nc: NetCdf3.NcFile,
+                        name: String): Array[Double] = {
+    val v = nc.variable(name)
+    val n = nc.shape(name).foldLeft(1L)(_ * _).toInt
+    val raw = new Array[Byte](v.vsize.toInt)
+    in.readFully(v.begin, raw, 0, raw.length)
+    NetCdf3.decodeDoubles(v.ncType, n, raw, 0, raw.length)
   }
 }

@@ -20,7 +20,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * parallelises at CHUNK granularity — finer than the per-granule netCDF
   * and HDF5 scans (ONE huge array still fans out across the cluster). The
   * driver reads only the tiny JSON metadata and the 1-d coordinate arrays
-  * (broadcast with the task closure); every 2-d chunk decodes inside a
+  * (broadcast with the task closure); every data chunk decodes inside a
   * binaryFile scan task, emitting rows for its own grid slice.
   *
   * Scope (checked, loud errors outside it): zarr v2 AND v3 READ (v3 =
@@ -32,7 +32,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * compressor null, zlib/gzip, bare zstd (numcodecs `Zstd()`, via
   * [[ZstdLite]]), or blosc with blosclz/lz4/zlib/zstd inner codecs — the
   * zarr DEFAULT (numcodecs Blosc) — via the pure-JVM [[BloscLite]] frame
-  * codec (snappy frames raise naming the codec); 1-d coordinate + 2-d
+  * codec (snappy frames raise naming the codec); 1-d coordinate + N-d
   * data arrays.
   *
   * WRITE side emits either format: zarr v2 (`.zarray`/`.zattrs` +
@@ -88,18 +88,21 @@ object ZarrGrid extends Serializable {
             s"$name: compressor '$o' not supported (null/zlib/zstd/blosc only)")
         }
     }
-    // absent chunk files legally mean "all fill_value" in zarr v2
-    // (xarray/NaN-heavy stores omit them); null fill -> missing chunks raise
-    val fill = (j \ "fill_value") match {
-      case JNull | JNothing => None
-      case JString("NaN") => Some(Double.NaN)
-      case JString("Infinity") => Some(Double.PositiveInfinity)
-      case JString("-Infinity") => Some(Double.NegativeInfinity)
-      case v => Some(v.extract[Double])
-    }
     ZMeta((j \ "shape").extract[Seq[Int]], (j \ "chunks").extract[Seq[Int]],
       (j \ "dtype").extract[String], comp,
-      (j \ "dimension_separator").extractOpt[String].getOrElse("."), fill)
+      (j \ "dimension_separator").extractOpt[String].getOrElse("."), fillOf(j))
+  }
+
+  /** `fill_value` of either format: absent chunk files legally mean "all
+    * fill_value" (xarray/NaN-heavy stores omit them); a null fill makes
+    * missing chunks raise.
+    */
+  private def fillOf(j: JValue): Option[Double] = (j \ "fill_value") match {
+    case JNull | JNothing => None
+    case JString("NaN") => Some(Double.NaN)
+    case JString("Infinity") => Some(Double.PositiveInfinity)
+    case JString("-Infinity") => Some(Double.NegativeInfinity)
+    case v => Some(v.extract[Double])
   }
 
   /** Zarr V3 array metadata (`zarr.json`, the format zarr-python 3 writes
@@ -172,14 +175,7 @@ object ZarrGrid extends Serializable {
       case "v2" => ""
       case o => throw new IllegalArgumentException(s"$name: chunk key encoding '$o' not supported")
     }
-    val fill = (j \ "fill_value") match {
-      case JNull | JNothing => None
-      case JString("NaN") => Some(Double.NaN)
-      case JString("Infinity") => Some(Double.PositiveInfinity)
-      case JString("-Infinity") => Some(Double.NegativeInfinity)
-      case v => Some(v.extract[Double])
-    }
-    ZMeta(shape, chunks, dtype, comp, sep, fill, prefix,
+    ZMeta(shape, chunks, dtype, comp, sep, fillOf(j), prefix,
       innerChunks, innerComp, indexAtEnd, indexCrc)
   }
 
@@ -193,18 +189,6 @@ object ZarrGrid extends Serializable {
       fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$name/.zarray")))
       parseZarray(metaJson(spark, dir, s"$name/.zarray", cons), name)
     else parseZarrayV3(metaJson(spark, dir, s"$name/zarr.json", cons), name)
-  }
-
-  /** chunk-file name of chunk (ci, cj) for this array's key encoding. */
-  private def chunkRelOf(m: ZMeta, ci: Int, cj: Int): String =
-    s"${m.prefix}$ci${m.sep}$cj"
-
-  /** (ci, cj) back out of a chunk path's relative name. */
-  private def parseChunkIdx(m: ZMeta, rel: String, path: String): (Int, Int) = {
-    val r = if (m.prefix.nonEmpty && rel.startsWith(m.prefix)) rel.substring(m.prefix.length) else rel
-    val idx = r.split(if (m.sep == "/") "/" else "\\.").map(_.toInt)
-    require(idx.length == 2, s"$path: bad chunk name '$rel'")
-    (idx(0), idx(1))
   }
 
   /** Fully-fill chunk for an absent chunk file, or a loud error when the
@@ -308,8 +292,9 @@ object ZarrGrid extends Serializable {
     }
   }
 
-  private def decodePlain(raw: Array[Byte], m: ZMeta, name: String): Array[Double] = {
-    val bytes = m.comp match {
+  /** Chunk bytes with compressor `comp` undone. */
+  private def decompress(raw: Array[Byte], comp: String, name: String): Array[Byte] =
+    comp match {
       case "none" => raw
       case "blosc" => BloscLite.decompress(raw, name)
       case "zstd" => ZstdLite.decompress(raw, name)
@@ -335,6 +320,9 @@ object ZarrGrid extends Serializable {
         inf.end()
         out.toByteArray
     }
+
+  private def decodePlain(raw: Array[Byte], m: ZMeta, name: String): Array[Double] = {
+    val bytes = decompress(raw, m.comp, name)
     val es = dtypeSize(m.dtype, name)
     val n = m.chunks.product
     require(bytes.length == n * es,
@@ -487,32 +475,38 @@ object ZarrGrid extends Serializable {
     out
   }
 
-  /** Present (ci, cj) chunk indices of a 2-d array directory — one driver
-    * file listing (the same listing a binaryFile scan performs anyway).
+  /** Present chunk indices of a rank-R array directory — one driver
+    * listing walk (the same listing a binaryFile scan performs anyway).
     */
-  private def presentChunks2d(spark: SparkSession, arrDir: String, m: ZMeta): Set[(Int, Int)] = {
+  private def presentChunks(spark: SparkSession, arrDir: String, m: ZMeta,
+                            rank: Int): Set[Seq[Int]] = {
     val fs = fsFor(spark, arrDir)
     // v3 default keys nest under the "c" prefix directory (sep "/") or
-    // flatten to "c.ci.cj" files (sep "."); v2 keys sit directly in the
+    // flatten to "c.i.j" files (sep "."); v2 keys sit directly in the
     // array dir
     val base = new org.apache.hadoop.fs.Path(
       if (m.prefix.nonEmpty && m.sep == "/") s"$arrDir/c" else arrDir)
     if (!fs.exists(base)) Set.empty
-    else if (m.sep == "/")
-      fs.listStatus(base).filter(s => s.isDirectory && !s.getPath.getName.startsWith(".") &&
-        s.getPath.getName.forall(_.isDigit))
-        .flatMap { d =>
-          val ci = d.getPath.getName.toInt
-          fs.listStatus(d.getPath).filterNot(_.getPath.getName.startsWith("."))
-            .map(f => (ci, f.getPath.getName.toInt))
-        }.toSet
-    else {
-      val pat = (if (m.prefix.nonEmpty) "c\\." else "") + "\\d+\\.\\d+"
+    else if (m.sep == "/") {
+      def walk(p: org.apache.hadoop.fs.Path, acc: List[Int]): Seq[Seq[Int]] =
+        fs.listStatus(p).toSeq
+          .filter(s => !s.getPath.getName.startsWith(".") && s.getPath.getName.forall(_.isDigit))
+          .flatMap { s =>
+            val next = acc :+ s.getPath.getName.toInt
+            if (next.length == rank && s.isFile) Seq(next)
+            else if (next.length < rank && s.isDirectory) walk(s.getPath, next)
+            else Nil
+          }
+      walk(base, Nil).toSet
+    } else {
+      val prefixStr = if (m.prefix.nonEmpty) "c." else ""
       fs.listStatus(base).map(_.getPath.getName)
-        .filter(n => !n.startsWith(".") && n.matches(pat))
-        .map { n =>
-          val parts = n.stripPrefix(if (m.prefix.nonEmpty) "c." else "").split("\\.")
-          (parts(0).toInt, parts(1).toInt)
+        .filter(n => !n.startsWith(".") && n.startsWith(prefixStr))
+        .flatMap { n =>
+          val parts = n.stripPrefix(prefixStr).split("\\.")
+          if (parts.length == rank && parts.forall(p => p.nonEmpty && p.forall(_.isDigit)))
+            Some(parts.map(_.toInt).toSeq)
+          else None
         }.toSet
     }
   }
@@ -548,195 +542,39 @@ object ZarrGrid extends Serializable {
 
   /** Read 2-d (yDim, xDim) variables of a zarr group into rows
     * (xDim, yDim, vars...) — the xarray `open_zarr().to_dataframe()`
-    * layout, chunk-parallel.
-    *
-    * When the variables share ONE chunk grid (the common xarray layout),
-    * a single binaryFile scan over the first variable's chunks drives the
-    * job and each task opens the SIBLING chunk files of the other
-    * variables directly — ZERO shuffle, k-variable rows assembled
-    * in-task. Misaligned chunk grids fall back to per-variable scans
-    * equi-joined on the (x, y) cell.
+    * layout: the rank-2 case of [[readGridNd]].
     */
   def readGrid2d(spark: SparkSession, dir: String, xDim: String, yDim: String,
-                 varNames: Seq[String]): DataFrame = {
-    require(varNames.nonEmpty, "no variables requested")
-    val cons = consolidated(spark, dir)
-    val xs = readArrayLocal(spark, dir, xDim, cons)
-    val ys = readArrayLocal(spark, dir, yDim, cons)
-    val metas = varNames.map { v =>
-      val m = arrayMeta(spark, dir, v, cons)
-      require(m.shape == Seq(ys.length, xs.length),
-        s"$v shape ${m.shape} != (${ys.length}, ${xs.length}) = ($yDim, $xDim)")
-      require(m.chunks.length == 2, s"$v: chunk rank ${m.chunks.length} != 2")
-      v -> m
-    }.toMap
+                 varNames: Seq[String]): DataFrame =
+    xFirst(readGridNd(spark, dir, Seq(yDim, xDim), varNames), Seq(yDim, xDim), varNames)
 
-    val m0 = metas(varNames.head)
-    val aligned = varNames.forall(v =>
-      metas(v).chunks == m0.chunks && metas(v).sep == m0.sep && metas(v).prefix == m0.prefix)
-
-    if (aligned) {
-      val cr = m0.chunks(0)
-      val cc = m0.chunks(1)
-      val schema = StructType(
-        StructField(xDim, DoubleType, nullable = false) +:
-          StructField(yDim, DoubleType, nullable = false) +:
-          varNames.map(v => StructField(v, DoubleType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      val xsB = xs; val ysB = ys; val metasB = metas
-      val v0 = varNames.head; val others = varNames.tail; val dirB = dir
-      // tasks read sibling chunks with the SESSION's Hadoop conf (fs.*
-      // settings / credentials), not a default-constructed one
-      val confB = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
-      def siblingChunk(v: String, ci: Int, cj: Int): Array[Double] = {
-        val rel = chunkRelOf(metasB(v), ci, cj)
-        readChunkFile(confB.value.value, s"$dirB/$v/$rel") match {
-          case Some(bytes) => decodeChunk(bytes, metasB(v), v)
-          case None => fillChunk(metasB(v), v, rel)
-        }
-      }
-      def rowsOf(ci: Int, cj: Int, all: Seq[Array[Double]]): Iterator[Row] =
-        for {
-          i <- (0 until cr).iterator if ci * cr + i < ysB.length
-          j <- (0 until cc).iterator if cj * cc + j < xsB.length
-        } yield Row.fromSeq(
-          xsB(cj * cc + j) +: ysB(ci * cr + i) +: all.map(_(i * cc + j)))
-
-      val scanned = chunkFiles(spark, dir, v0)
-        .flatMap { r =>
-          val path = r.getString(0)
-          val rel = r.getString(1)
-          val (ci, cj) = parseChunkIdx(metasB(v0), rel, path)
-          // first variable's chunk from the scan; siblings opened in-task
-          val all = decodeChunk(r.getAs[Array[Byte]](2), metasB(v0), v0) +:
-            others.map(v => siblingChunk(v, ci, cj))
-          rowsOf(ci, cj, all)
-        }(enc)
-
-      // zarr legally omits all-fill chunk files: cells of v0 chunks with no
-      // file are synthesized from fill_value in a (usually empty) side scan
-      val nci = (ys.length + cr - 1) / cr
-      val ncj = (xs.length + cc - 1) / cc
-      val expected = for { ci <- 0 until nci; cj <- 0 until ncj } yield (ci, cj)
-      val missing = expected.filterNot(presentChunks2d(spark, s"$dir/$v0", m0))
-      if (missing.isEmpty) scanned
-      else {
-        missing.foreach(c => if (m0.fill.isEmpty)
-          fillChunk(m0, v0, chunkRelOf(m0, c._1, c._2))) // loud error path
-        import spark.implicits._
-        val synthesized = missing.toDS().repartition(math.min(missing.size, 32))
-          .flatMap { case (ci, cj) =>
-            val all = fillChunk(metasB(v0), v0, chunkRelOf(m0, ci, cj)) +:
-              others.map(v => siblingChunk(v, ci, cj))
-            rowsOf(ci, cj, all)
-          }(enc)
-        scanned.unionAll(synthesized)
-      }
-    } else {
-      // fallback: per-variable chunk scans joined on the grid cell
-      def varDf(v: String): DataFrame = {
-        val m = metas(v)
-        val cr = m.chunks(0)
-        val cc = m.chunks(1)
-        val schema = StructType(Seq(
-          StructField(xDim, DoubleType, nullable = false),
-          StructField(yDim, DoubleType, nullable = false),
-          StructField(v, DoubleType, nullable = false)))
-        val enc = org.apache.spark.sql.Encoders.row(schema)
-        val xsB = xs; val ysB = ys; val mB = m; val vName = v
-        def rowsOf(ci: Int, cj: Int, vals: Array[Double]): Iterator[Row] =
-          for {
-            i <- (0 until cr).iterator if ci * cr + i < ysB.length
-            j <- (0 until cc).iterator if cj * cc + j < xsB.length
-          } yield Row(xsB(cj * cc + j), ysB(ci * cr + i), vals(i * cc + j))
-        val scanned = chunkFiles(spark, dir, v)
-          .flatMap { r =>
-            val path = r.getString(0)
-            val rel = r.getString(1)
-            val (ci, cj) = parseChunkIdx(mB, rel, path)
-            rowsOf(ci, cj, decodeChunk(r.getAs[Array[Byte]](2), mB, vName))
-          }(enc)
-        // absent chunk files = fill_value cells (or a loud error)
-        val nci = (ysB.length + cr - 1) / cr
-        val ncj = (xsB.length + cc - 1) / cc
-        val expected = for { ci <- 0 until nci; cj <- 0 until ncj } yield (ci, cj)
-        val missing = expected.filterNot(presentChunks2d(spark, s"$dir/$v", m))
-        if (missing.isEmpty) scanned
-        else {
-          import spark.implicits._
-          val synthesized = missing.toDS().repartition(math.min(missing.size, 32))
-            .flatMap { case (ci, cj) =>
-              rowsOf(ci, cj, fillChunk(mB, vName, chunkRelOf(mB, ci, cj)))
-            }(enc)
-          scanned.unionAll(synthesized)
-        }
-      }
-      varNames.map(varDf).reduce((a, b) => a.join(b, Seq(xDim, yDim)))
-    }
-  }
+  /** The 2-d column order (xDim, yDim, vars...) of every rank-2 read;
+    * other ranks keep the C-order dims. */
+  private def xFirst(df: DataFrame, dims: Seq[String], varNames: Seq[String]): DataFrame =
+    if (dims.length != 2) df
+    else df.select((Seq(dims(1), dims(0)) ++ varNames).map(col): _*)
 
   /** chunk-file name of a rank-R chunk index for this array's key encoding. */
-  private def chunkRelOfN(m: ZMeta, idx: Seq[Int]): String =
+  private def chunkRelOf(m: ZMeta, idx: Seq[Int]): String =
     m.prefix + idx.mkString(m.sep)
 
   /** Rank-R chunk index back out of a chunk path's relative name. */
-  private def parseChunkIdxN(m: ZMeta, rel: String, path: String, rank: Int): Seq[Int] = {
+  private def parseChunkIdx(m: ZMeta, rel: String, path: String, rank: Int): Seq[Int] = {
     val r = if (m.prefix.nonEmpty && rel.startsWith(m.prefix)) rel.substring(m.prefix.length) else rel
     val idx = r.split(if (m.sep == "/") "/" else "\\.").map(_.toInt).toSeq
     require(idx.length == rank, s"$path: bad chunk name '$rel' (expected rank $rank)")
     idx
   }
 
-  /** Present chunk indices of a rank-R array directory — one driver
-    * listing walk (the same listing a binaryFile scan performs anyway).
+  /** Shared prelude of [[readGridNd]] and [[readGridNdWindow]]: the dim
+    * axes (driver-side, axis-sized), each variable's metadata checked
+    * against them, and whether all variables share one chunk grid.
     */
-  private def presentChunksNd(spark: SparkSession, arrDir: String, m: ZMeta,
-                              rank: Int): Set[Seq[Int]] = {
-    val fs = fsFor(spark, arrDir)
-    val base = new org.apache.hadoop.fs.Path(
-      if (m.prefix.nonEmpty && m.sep == "/") s"$arrDir/c" else arrDir)
-    if (!fs.exists(base)) Set.empty
-    else if (m.sep == "/") {
-      def walk(p: org.apache.hadoop.fs.Path, acc: List[Int]): Seq[Seq[Int]] =
-        fs.listStatus(p).toSeq
-          .filter(s => !s.getPath.getName.startsWith(".") && s.getPath.getName.forall(_.isDigit))
-          .flatMap { s =>
-            val next = acc :+ s.getPath.getName.toInt
-            if (next.length == rank && s.isFile) Seq(next)
-            else if (next.length < rank && s.isDirectory) walk(s.getPath, next)
-            else Nil
-          }
-      walk(base, Nil).toSet
-    } else {
-      val prefixStr = if (m.prefix.nonEmpty) "c." else ""
-      fs.listStatus(base).map(_.getPath.getName)
-        .filter(n => !n.startsWith(".") && n.startsWith(prefixStr))
-        .flatMap { n =>
-          val parts = n.stripPrefix(prefixStr).split("\\.")
-          if (parts.length == rank && parts.forall(p => p.nonEmpty && p.forall(_.isDigit)))
-            Some(parts.map(_.toInt).toSeq)
-          else None
-        }.toSet
-    }
-  }
-
-  /** Read rank-R variables of a zarr group into long-form rows
-    * (dims..., vars...) — the xarray `to_dataframe().reset_index()`
-    * layout for N-d datasets; `(time, y, x)` daily-grid archives are the
-    * archetype. Dims are given in the arrays' own C-order
-    * (slowest-varying first). Chunk files stay the unit of parallelism
-    * exactly as in [[readGrid2d]]: aligned variables ride ONE binaryFile
-    * scan with sibling chunk reads in-task (zero shuffle); misaligned
-    * chunk grids fall back to per-variable scans equi-joined on the dim
-    * columns; absent chunk files synthesize fill_value cells.
-    */
-  def readGridNd(spark: SparkSession, dir: String, dims: Seq[String],
-                 varNames: Seq[String]): DataFrame = {
+  private def gridLayout(spark: SparkSession, dir: String, dims: Seq[String],
+                         varNames: Seq[String])
+      : (Seq[Array[Double]], Map[String, ZMeta], Boolean) = {
     require(varNames.nonEmpty, "no variables requested")
     require(dims.nonEmpty, "no dims given")
-    val rank = dims.length
     val cons = consolidated(spark, dir)
     val axes = dims.map(d => readArrayLocal(spark, dir, d, cons))
     val shape = axes.map(_.length)
@@ -744,117 +582,118 @@ object ZarrGrid extends Serializable {
       val m = arrayMeta(spark, dir, v, cons)
       require(m.shape == shape,
         s"$v shape ${m.shape} != $shape = (${dims.mkString(", ")})")
-      require(m.chunks.length == rank, s"$v: chunk rank ${m.chunks.length} != $rank")
+      require(m.chunks.length == dims.length, s"$v: chunk rank ${m.chunks.length} != ${dims.length}")
       v -> m
     }.toMap
     val m0 = metas(varNames.head)
     val aligned = varNames.forall(v =>
       metas(v).chunks == m0.chunks && metas(v).sep == m0.sep && metas(v).prefix == m0.prefix)
+    (axes, metas, aligned)
+  }
 
-    val axesB = axes.map(identity) // stable local capture for closures
-    val shapeB = shape.toArray
-    // odometer over one chunk's cells: chunk-local -> global indices,
-    // skipping the padded cells of edge chunks
-    def rowsOf(m: ZMeta, cidx: Seq[Int], all: Seq[Array[Double]]): Iterator[Row] = {
-      val k = m.chunks.toArray
-      val strides = new Array[Int](rank) // row-major strides within the chunk
-      var s = 1
-      var d = rank - 1
-      while (d >= 0) { strides(d) = s; s *= k(d); d -= 1 }
-      val cbase = cidx.toArray
-      Iterator.range(0, k.product).flatMap { p =>
-        val g = new Array[Int](rank)
-        var rem = p
-        var ok = true
-        var i = 0
-        while (i < rank) {
-          val ci = rem / strides(i); rem %= strides(i)
-          val gi = cbase(i) * k(i) + ci
-          if (gi >= shapeB(i)) ok = false
-          g(i) = gi
-          i += 1
-        }
-        if (!ok) None
-        else Some(Row.fromSeq(
-          (0 until rank).map(i => axesB(i)(g(i))) ++ all.map(_(p))))
+  /** Rows (dims..., vars...) of one chunk: an odometer over its cells
+    * mapping chunk-local to global indices, skipping the padded cells of
+    * edge chunks and, when `keep` is non-null, the cells outside the
+    * window. `all` holds one decoded full-extent chunk per variable.
+    */
+  private def chunkRows(chunks: Seq[Int], cidx: Seq[Int], axes: Seq[Array[Double]],
+                        keep: Array[Array[Boolean]], all: Seq[Array[Double]]): Iterator[Row] = {
+    val rank = chunks.length
+    val k = chunks.toArray
+    val ax = axes.toArray
+    val strides = new Array[Int](rank) // row-major strides within the chunk
+    var s = 1
+    var d = rank - 1
+    while (d >= 0) { strides(d) = s; s *= k(d); d -= 1 }
+    val cbase = cidx.toArray
+    Iterator.range(0, k.product).flatMap { p =>
+      val g = new Array[Int](rank)
+      var rem = p
+      var ok = true
+      var i = 0
+      while (i < rank) {
+        val ci = rem / strides(i); rem %= strides(i)
+        val gi = cbase(i) * k(i) + ci
+        if (gi >= ax(i).length || (keep != null && !keep(i)(gi))) ok = false
+        g(i) = gi
+        i += 1
+      }
+      if (!ok) None
+      else Some(Row.fromSeq((0 until rank).map(i => ax(i)(g(i))) ++ all.map(_(p))))
+    }
+  }
+
+  /** Read rank-R variables of a zarr group into long-form rows
+    * (dims..., vars...) — the xarray `to_dataframe().reset_index()`
+    * layout; `(time, y, x)` daily-grid archives are the archetype, and
+    * [[readGrid2d]] is the rank-2 case. Dims are given in the arrays' own
+    * C-order (slowest-varying first). Chunk files are the unit of
+    * parallelism: aligned variables ride ONE binaryFile scan with sibling
+    * chunk reads in-task (zero shuffle); misaligned chunk grids fall back
+    * to per-variable scans equi-joined on the dim columns; absent chunk
+    * files synthesize fill_value cells.
+    */
+  def readGridNd(spark: SparkSession, dir: String, dims: Seq[String],
+                 varNames: Seq[String]): DataFrame = {
+    val (axes, metas, aligned) = gridLayout(spark, dir, dims, varNames)
+    if (aligned) scanChunks(spark, dir, dims, varNames, axes, metas)
+    else varNames.map(v => scanChunks(spark, dir, dims, Seq(v), axes, metas))
+      .reduce((a, b) => a.join(b, dims))
+  }
+
+  /** One chunk-parallel scan of variables sharing a chunk grid: a
+    * binaryFile scan over the first variable's chunks drives the job and
+    * each task opens the SIBLING chunk files of the others directly, so
+    * k-variable rows assemble in-task. Zarr legally omits all-fill chunk
+    * files: cells of first-variable chunks with no file come from
+    * fill_value in a (usually empty) side scan, or raise when the array
+    * declares none.
+    */
+  private def scanChunks(spark: SparkSession, dir: String, dims: Seq[String],
+                         varNames: Seq[String], axes: Seq[Array[Double]],
+                         metas: Map[String, ZMeta]): DataFrame = {
+    val rank = dims.length
+    val schema = StructType(
+      dims.map(d => StructField(d, DoubleType, nullable = false)) ++
+        varNames.map(v => StructField(v, DoubleType, nullable = false)))
+    val enc = org.apache.spark.sql.Encoders.row(schema)
+    val v0 = varNames.head; val others = varNames.tail
+    val m0 = metas(v0)
+    // tasks read sibling chunks with the SESSION's Hadoop conf (fs.*
+    // settings / credentials), not a default-constructed one
+    val confB = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf()))
+    def siblingChunk(v: String, cidx: Seq[Int]): Array[Double] = {
+      val rel = chunkRelOf(metas(v), cidx)
+      readChunkFile(confB.value.value, s"$dir/$v/$rel") match {
+        case Some(bytes) => decodeChunk(bytes, metas(v), v)
+        case None => fillChunk(metas(v), v, rel)
       }
     }
-
-    if (aligned) {
-      val schema = StructType(
-        dims.map(d => StructField(d, DoubleType, nullable = false)) ++
-          varNames.map(v => StructField(v, DoubleType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(schema)
-      val metasB = metas
-      val v0 = varNames.head; val others = varNames.tail; val dirB = dir
-      val confB = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
-      def siblingChunk(v: String, cidx: Seq[Int]): Array[Double] = {
-        val rel = chunkRelOfN(metasB(v), cidx)
-        readChunkFile(confB.value.value, s"$dirB/$v/$rel") match {
-          case Some(bytes) => decodeChunk(bytes, metasB(v), v)
-          case None => fillChunk(metasB(v), v, rel)
-        }
-      }
-      val scanned = chunkFiles(spark, dir, v0)
-        .flatMap { r =>
-          val path = r.getString(0)
-          val rel = r.getString(1)
-          val cidx = parseChunkIdxN(metasB(v0), rel, path, rank)
-          val all = decodeChunk(r.getAs[Array[Byte]](2), metasB(v0), v0) +:
+    val scanned = chunkFiles(spark, dir, v0)
+      .flatMap { r =>
+        val cidx = parseChunkIdx(m0, r.getString(1), r.getString(0), rank)
+        val all = decodeChunk(r.getAs[Array[Byte]](2), m0, v0) +:
+          others.map(v => siblingChunk(v, cidx))
+        chunkRows(m0.chunks, cidx, axes, null, all)
+      }(enc)
+    val nPer = axes.indices.map(i => (axes(i).length + m0.chunks(i) - 1) / m0.chunks(i))
+    val expected = nPer.foldLeft(Seq(Seq.empty[Int])) { (acc, n) =>
+      acc.flatMap(pfx => (0 until n).map(pfx :+ _))
+    }
+    val missing = expected.filterNot(presentChunks(spark, s"$dir/$v0", m0, rank))
+    if (missing.isEmpty) scanned
+    else {
+      missing.foreach(c => if (m0.fill.isEmpty) fillChunk(m0, v0, chunkRelOf(m0, c)))
+      import spark.implicits._
+      val synthesized = missing.toDS().repartition(math.min(missing.size, 32))
+        .flatMap { cidx =>
+          val all = fillChunk(m0, v0, chunkRelOf(m0, cidx)) +:
             others.map(v => siblingChunk(v, cidx))
-          rowsOf(metasB(v0), cidx, all)
+          chunkRows(m0.chunks, cidx, axes, null, all)
         }(enc)
-      val nPer = (0 until rank).map(i => (shape(i) + m0.chunks(i) - 1) / m0.chunks(i))
-      val expected = nPer.foldLeft(Seq(Seq.empty[Int])) { (acc, n) =>
-        acc.flatMap(pfx => (0 until n).map(pfx :+ _))
-      }
-      val missing = expected.filterNot(presentChunksNd(spark, s"$dir/$v0", m0, rank))
-      if (missing.isEmpty) scanned
-      else {
-        missing.foreach(c => if (m0.fill.isEmpty) fillChunk(m0, v0, chunkRelOfN(m0, c)))
-        import spark.implicits._
-        val synthesized = missing.toDS().repartition(math.min(missing.size, 32))
-          .flatMap { cidx =>
-            val all = fillChunk(metasB(v0), v0, chunkRelOfN(m0, cidx)) +:
-              others.map(v => siblingChunk(v, cidx))
-            rowsOf(metasB(v0), cidx, all)
-          }(enc)
-        scanned.unionAll(synthesized)
-      }
-    } else {
-      // fallback: per-variable chunk scans joined on the dim columns
-      def varDf(v: String): DataFrame = {
-        val m = metas(v)
-        val schema = StructType(
-          dims.map(d => StructField(d, DoubleType, nullable = false)) :+
-            StructField(v, DoubleType, nullable = false))
-        val enc = org.apache.spark.sql.Encoders.row(schema)
-        val mB = m; val vName = v
-        val scanned = chunkFiles(spark, dir, v)
-          .flatMap { r =>
-            val path = r.getString(0)
-            val rel = r.getString(1)
-            val cidx = parseChunkIdxN(mB, rel, path, rank)
-            rowsOf(mB, cidx, Seq(decodeChunk(r.getAs[Array[Byte]](2), mB, vName)))
-          }(enc)
-        val nPer = (0 until rank).map(i => (shape(i) + m.chunks(i) - 1) / m.chunks(i))
-        val expected = nPer.foldLeft(Seq(Seq.empty[Int])) { (acc, n) =>
-          acc.flatMap(pfx => (0 until n).map(pfx :+ _))
-        }
-        val missing = expected.filterNot(presentChunksNd(spark, s"$dir/$v", m, rank))
-        if (missing.isEmpty) scanned
-        else {
-          import spark.implicits._
-          val synthesized = missing.toDS().repartition(math.min(missing.size, 32))
-            .flatMap { cidx =>
-              rowsOf(mB, cidx, Seq(fillChunk(mB, vName, chunkRelOfN(mB, cidx))))
-            }(enc)
-          scanned.unionAll(synthesized)
-        }
-      }
-      varNames.map(varDf).reduce((a, b) => a.join(b, dims))
+      scanned.unionAll(synthesized)
     }
   }
 
@@ -965,29 +804,17 @@ object ZarrGrid extends Serializable {
   def readGridNdWindow(spark: SparkSession, dir: String, dims: Seq[String],
                        varNames: Seq[String], ranges: Map[String, (Double, Double)],
                        stats: WindowStats = null): DataFrame = {
-    require(varNames.nonEmpty, "no variables requested")
-    require(dims.nonEmpty, "no dims given")
     val unknown = ranges.keySet -- dims.toSet
     require(unknown.isEmpty, s"window ranges on non-dim columns: ${unknown.mkString(", ")}")
-    val rank = dims.length
-    val cons = consolidated(spark, dir)
-    val axes = dims.map(d => readArrayLocal(spark, dir, d, cons))
-    val shape = axes.map(_.length)
-    val metas = varNames.map { v =>
-      val m = arrayMeta(spark, dir, v, cons)
-      require(m.shape == shape, s"$v shape ${m.shape} != $shape = (${dims.mkString(", ")})")
-      require(m.chunks.length == rank, s"$v: chunk rank ${m.chunks.length} != $rank")
-      v -> m
-    }.toMap
-    val m0 = metas(varNames.head)
-    val aligned = varNames.forall(v =>
-      metas(v).chunks == m0.chunks && metas(v).sep == m0.sep && metas(v).prefix == m0.prefix)
+    val (axes, metas, aligned) = gridLayout(spark, dir, dims, varNames)
     if (!aligned) {
       // no shared chunk grid to prune against: correct-but-unpruned path
       var df = readGridNd(spark, dir, dims, varNames)
       ranges.foreach { case (d, (lo, hi)) => df = df.filter(col(d) >= lo && col(d) <= hi) }
       return df
     }
+    val m0 = metas(varNames.head)
+    val shape = axes.map(_.length)
     val keep: Array[Array[Boolean]] = dims.indices.map { i =>
       ranges.get(dims(i)) match {
         case Some((lo, hi)) => axes(i).map(v => v >= lo && v <= hi)
@@ -1014,8 +841,7 @@ object ZarrGrid extends Serializable {
       dims.map(d => StructField(d, DoubleType, nullable = false)) ++
         varNames.map(v => StructField(v, DoubleType, nullable = false)))
     val enc = org.apache.spark.sql.Encoders.row(schema)
-    val axesB = axes; val shapeB = shape.toArray; val keepB = keep
-    val metasB = metas; val dirB = dir; val varsB = varNames
+    val shapeB = shape.toArray
     val innerRead = if (stats != null) stats.innerChunksRead
       else spark.sparkContext.longAccumulator("zarr.innerChunksRead")
     val innerTotal = if (stats != null) stats.innerChunksTotal
@@ -1032,40 +858,18 @@ object ZarrGrid extends Serializable {
       val cidx = cidxArr.toSeq
       val conf = confB.value.value
       def chunkOf(v: String): Array[Double] = {
-        val m = metasB(v)
-        val path = s"$dirB/$v/${chunkRelOfN(m, cidx)}"
+        val m = metas(v)
+        val path = s"$dir/$v/${chunkRelOf(m, cidx)}"
         val got =
           if (m.innerChunks.nonEmpty)
-            readShardWindow(conf, path, m, v, cidx, keepB, shapeB,
+            readShardWindow(conf, path, m, v, cidx, keep, shapeB,
               innerRead, innerTotal, bytesAcc)
           else readChunkFile(conf, path).map { bytes =>
             bytesAcc.add(bytes.length.toLong); decodeChunk(bytes, m, v)
           }
-        got.getOrElse(fillChunk(m, v, chunkRelOfN(m, cidx)))
+        got.getOrElse(fillChunk(m, v, chunkRelOf(m, cidx)))
       }
-      val all = varsB.map(chunkOf)
-      val m = metasB(varsB.head)
-      val k = m.chunks.toArray
-      val strides = new Array[Int](k.length)
-      var s = 1
-      var d = k.length - 1
-      while (d >= 0) { strides(d) = s; s *= k(d); d -= 1 }
-      Iterator.range(0, k.product).flatMap { pidx =>
-        val g = new Array[Int](k.length)
-        var rem = pidx
-        var ok = true
-        var i = 0
-        while (i < k.length) {
-          val ci = rem / strides(i); rem %= strides(i)
-          val gi = cidx(i) * k(i) + ci
-          if (gi >= shapeB(i) || !keepB(i)(gi)) ok = false
-          g(i) = gi
-          i += 1
-        }
-        if (!ok) None
-        else Some(Row.fromSeq(
-          (0 until k.length).map(i => axesB(i)(g(i))) ++ all.map(_(pidx))))
-      }
+      chunkRows(m0.chunks, cidx, axes, keep, varNames.map(chunkOf))
     }(enc)
   }
 
@@ -1079,8 +883,8 @@ object ZarrGrid extends Serializable {
                        stats: WindowStats = null): DataFrame = {
     val ranges = Seq(xDim -> xRange, yDim -> yRange)
       .collect { case (d, Some(r)) => d -> r }.toMap
-    readGridNdWindow(spark, dir, Seq(yDim, xDim), varNames, ranges, stats)
-      .select((Seq(xDim, yDim) ++ varNames).map(col): _*)
+    xFirst(readGridNdWindow(spark, dir, Seq(yDim, xDim), varNames, ranges, stats),
+      Seq(yDim, xDim), varNames)
   }
 
   /** [[readStore]] with a coordinate window: same array/dim discovery,
@@ -1091,11 +895,7 @@ object ZarrGrid extends Serializable {
                       ranges: Map[String, (Double, Double)],
                       stats: WindowStats = null): DataFrame = {
     val (dims, dataVars) = storeLayout(spark, dir)
-    val df = readGridNdWindow(spark, dir, dims, dataVars, ranges, stats)
-    // match readStore's 2-d column order (xDim, yDim, vars...)
-    if (dims.length == 2)
-      df.select((Seq(dims(1), dims(0)) ++ dataVars).map(col): _*)
-    else df
+    xFirst(readGridNdWindow(spark, dir, dims, dataVars, ranges, stats), dims, dataVars)
   }
 
   /** Write a gridded table as one N-d zarr group with the CHUNK FILES
@@ -1110,76 +910,103 @@ object ZarrGrid extends Serializable {
                              varNames: Seq[String], compressor: String = "zlib",
                              zarrFormat: Int = 2, shardInnerRows: Int = 0): Unit = {
     require(dimCols.length >= 2, s"need >= 2 dims, got $dimCols")
+    writeDistributed(df, dir, dimCols, varNames, 1, compressor, zarrFormat, shardInnerRows)
+  }
+
+  /** The executor-side zarr sink behind [[writeGridNdDistributed]] and
+    * [[writeGrid2dDistributed]]: axes and the lattice check in one job
+    * (the only driver-side data), metadata, then [[writeBands]] with
+    * chunks of `bandRows` first-dim values by the full tail axes.
+    * Sharding splits the first chunk dim longer than 1 into inner chunks
+    * of `shardInnerRows`: a 2-d `(cr, nx)` chunk gets `(shardInnerRows,
+    * nx)` inner chunks and a daily `(1, ny, nx)` slice `(1,
+    * shardInnerRows, nx)` y-band inner chunks — the ranged-read
+    * object-store layout.
+    */
+  private def writeDistributed(df: DataFrame, dir: String, dims: Seq[String],
+                               varNames: Seq[String], bandRows: Int, compressor: String,
+                               zarrFormat: Int, shardInnerRows: Int): Unit = {
     require(zarrFormat == 2 || zarrFormat == 3, s"zarrFormat $zarrFormat (2 or 3)")
     require(shardInnerRows == 0 || zarrFormat == 3, "sharding is a zarr v3 feature")
-    val spark = df.sparkSession
-    val rank = dimCols.length
     GridAxes.withPersisted(df) {
-    // axes: dim-axis-sized driver work (the only driver-side data), all
-    // dims + row count in ONE job (was rank + 1 input passes)
-    val (axes, total) = GridAxes.axesAndCount(df, dimCols)
-    val shape = axes.map(_.length)
-    require(total == shape.map(_.toLong).product,
-      s"rows $total != full ${shape.mkString(" x ")} lattice (duplicates or gaps)")
-    val chunks = 1 +: shape.tail
-    // sharding subdivides each first-dim slice along the SECOND dim: a
-    // daily (t, y, x) archive gets one shard per day of y-band inner
-    // chunks — the ranged-read object-store layout
-    require(shardInnerRows == 0 || shape(1) % shardInnerRows == 0,
-      s"shardInnerRows $shardInnerRows must divide dim '${dimCols(1)}' (${shape(1)})")
-    val shardInner =
-      if (shardInnerRows > 0) 1 +: shardInnerRows +: shape.drop(2) else Nil
-    writeMetaNd(spark, dir, dimCols, axes, varNames, chunks, compressor, zarrFormat,
-      shardInner)
+      val (axes, total) = GridAxes.axesAndCount(df, dims)
+      val shape = axes.map(_.length)
+      require(total == shape.map(_.toLong).product,
+        s"rows $total != full ${shape.mkString(" x ")} lattice (duplicates or gaps)")
+      require(total > 0, "no rows to write")
+      val chunks = math.min(bandRows, shape.head) +: shape.tail
+      val split = chunks.indexWhere(_ > 1)
+      require(shardInnerRows == 0 || split >= 0 && chunks(split) % shardInnerRows == 0,
+        s"shardInnerRows $shardInnerRows must divide the first chunk extent above 1 of " +
+          chunks.mkString("(", ", ", ")"))
+      val shardInner = if (shardInnerRows > 0) chunks.updated(split, shardInnerRows) else Nil
+      // metadata + coordinate arrays (tiny, driver-side, via the Hadoop FS
+      // API so the sink targets local paths, HDFS, or object stores alike)
+      writeMetaNd(df.sparkSession, dir, dims, axes, varNames, chunks, compressor, zarrFormat,
+        shardInner)
+      val v3 = zarrFormat == 3
+      writeBands(df, dir, dims, varNames, axes.map(_.zipWithIndex.toMap), chunks, 0,
+        shardInner, compressor, v3, (_, idx) => chunkKey(idx, v3))
+    }
+  }
 
-    val idxMaps = axes.map(_.zipWithIndex.toMap)
-    val sliceSize = shape.tail.product
-    // row-major strides within one first-dim slice (dims 1..R-1)
-    val strides = shape.tail.scanRight(1)(_ * _).tail.toArray
-    val dirB = dir; val vars = varNames; val compB = compressor
-    val v3B = zarrFormat == 3; val rankB = rank
-    val shardB = shardInner; val chunksB = chunks
+  /** The executor chunk writer of every distributed zarr sink. Rows of
+    * (dims..., vars...) hash-partition by band of `chunks.head` first-dim
+    * indices (`idxMaps`: coordinate value -> axis index, per dim); each
+    * task assembles its bands, the ragged last band zero-padded to the
+    * full chunk, and writes one file per (band, variable) under
+    * `keyOf(variable, (first + band, 0, ...))`: a plain `comp`-coded
+    * chunk, or a `sharding_indexed` shard of `shardInner` inner chunks.
+    */
+  private def writeBands(df: DataFrame, dir: String, dims: Seq[String], varNames: Seq[String],
+                         idxMaps: Seq[Map[Double, Int]], chunks: Seq[Int], first: Int,
+                         shardInner: Seq[Int], comp: String, v3: Boolean,
+                         keyOf: (String, Seq[Int]) => String): Unit = {
+    val spark = df.sparkSession
+    val rank = dims.length
+    val maps = idxMaps.toArray
+    val c0 = chunks.head
+    val bandSize = chunks.product
+    // row-major strides within one band
+    val strides = chunks.scanRight(1)(_ * _).tail.toArray
+    val vars = varNames.toArray
+    // tasks write with the SESSION's Hadoop conf (credentials, fs.* tuning)
     val confB = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf()))
-    val idxMapsB = idxMaps
-    df.select((dimCols ++ varNames).map(col): _*)
-      .repartition(shape.head, udfDimIdx(idxMaps.head)(col(dimCols.head)))
+    val bandOf = udf((v: Double) => maps(0)(v) / c0)
+    df.select((dims ++ varNames).map(col): _*)
+      .repartition((maps(0).size + c0 - 1) / c0, bandOf(col(dims.head)))
       .foreachPartition { (rows: Iterator[Row]) =>
-        // assemble the partition's slices (hash may co-locate several)
-        val slices = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
+        // assemble the partition's bands (hash may co-locate several)
+        val bands = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
         rows.foreach { r =>
-          val i0 = idxMapsB.head(r.getDouble(0))
-          var off = 0
+          val i0 = maps(0)(r.getDouble(0))
+          val b = i0 / c0
+          var off = (i0 - b * c0) * strides(0)
           var d = 1
-          while (d < rankB) { off += idxMapsB(d)(r.getDouble(d)) * strides(d - 1); d += 1 }
-          val sl = slices.getOrElseUpdate(i0,
-            Array.fill(vars.length)(new Array[Double](sliceSize)))
+          while (d < rank) { off += maps(d)(r.getDouble(d)) * strides(d); d += 1 }
+          val band = bands.getOrElseUpdate(b, Array.fill(vars.length)(new Array[Double](bandSize)))
           var v = 0
-          while (v < vars.length) { sl(v)(off) = r.getDouble(rankB + v); v += 1 }
+          while (v < vars.length) { band(v)(off) = r.getDouble(rank + v); v += 1 }
         }
-        if (slices.nonEmpty) {
+        if (bands.nonEmpty) {
           val conf = confB.value.value
-          slices.foreach { case (i0, sl) =>
+          bands.foreach { case (b, band) =>
             vars.indices.foreach { v =>
               val p = new org.apache.hadoop.fs.Path(
-                s"$dirB/${vars(v)}/${chunkKey(i0 +: Seq.fill(rankB - 1)(0), v3B)}")
-              val fs = rawFs(p.toString, conf)
-              val out = fs.create(p, true)
+                s"$dir/${vars(v)}/${keyOf(vars(v), (first + b) +: Seq.fill(rank - 1)(0))}")
               val payload =
-                if (shardB.nonEmpty)
-                  encodeShard(doubleLeBytes(sl(v)), chunksB, shardB, compB)
-                else encodeChunk(doubleLeBytes(sl(v)), compB, v3B)
+                if (shardInner.nonEmpty)
+                  encodeShard(doubleLeBytes(band(v)), chunks, shardInner, comp)
+                else encodeChunk(doubleLeBytes(band(v)), comp, v3)
+              val out = rawFs(p.toString, conf).create(p, true)
               try out.write(payload) finally out.close()
             }
           }
         }
       }
-    }
   }
-
-  // row -> first-dim slice index (used only to co-locate a slice's rows)
-  private def udfDimIdx(idx: Map[Double, Int]) = udf((v: Double) => idx(v))
 
   /** Append new FIRST-dim slices to a store written by
     * [[writeGridNdDistributed]] — the xarray `to_zarr(append_dim=dim0)`
@@ -1196,7 +1023,6 @@ object ZarrGrid extends Serializable {
                               varNames: Seq[String]): Unit = {
     require(dimCols.length >= 2, s"need >= 2 dims, got $dimCols")
     val spark = df.sparkSession
-    val rank = dimCols.length
     val fs = fsFor(spark, dir)
     val v3 = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/zarr.json"))
     val cons = consolidated(spark, dir)
@@ -1238,49 +1064,9 @@ object ZarrGrid extends Serializable {
         s"rows $total != full ${newVals.length} x ${tailShape.mkString(" x ")} lattice")
 
       // new slice chunks from the executors, indices offset past the store
-      val base = oldAxes.head.length
       val idxMaps = newVals.zipWithIndex.toMap +: oldAxes.tail.map(_.zipWithIndex.toMap)
-      val sliceSize = tailShape.product
-      val strides = tailShape.scanRight(1)(_ * _).tail.toArray
-      val dirB = dir; val vars = varNames; val compB = comp
-      val v3B = v3; val rankB = rank; val baseB = base
-      val metasB = metas
-      val confB = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
-      val idxMapsB = idxMaps
-      df.select((dimCols ++ varNames).map(col): _*)
-        .repartition(newVals.length, udfDimIdx(idxMaps.head)(col(dimCols.head)))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val slices = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
-          rows.foreach { r =>
-            val i0 = idxMapsB.head(r.getDouble(0))
-            var off = 0
-            var d = 1
-            while (d < rankB) { off += idxMapsB(d)(r.getDouble(d)) * strides(d - 1); d += 1 }
-            val sl = slices.getOrElseUpdate(i0,
-              Array.fill(vars.length)(new Array[Double](sliceSize)))
-            var v = 0
-            while (v < vars.length) { sl(v)(off) = r.getDouble(rankB + v); v += 1 }
-          }
-          if (slices.nonEmpty) {
-            val conf = confB.value.value
-            slices.foreach { case (i0, sl) =>
-              vars.indices.foreach { v =>
-                val m = metasB(vars(v))
-                val rel = chunkRelOfN(m, (baseB + i0) +: Seq.fill(rankB - 1)(0))
-                val p = new org.apache.hadoop.fs.Path(s"$dirB/${vars(v)}/$rel")
-                val fsT = rawFs(p.toString, conf)
-                val out = fsT.create(p, true)
-                val payload =
-                  if (m.innerChunks.nonEmpty)
-                    encodeShard(doubleLeBytes(sl(v)), m.chunks, m.innerChunks, compB)
-                  else encodeChunk(doubleLeBytes(sl(v)), compB, v3B)
-                try out.write(payload) finally out.close()
-              }
-            }
-          }
-        }
+      writeBands(df, dir, dimCols, varNames, idxMaps, m0.chunks, oldAxes.head.length,
+        m0.innerChunks, comp, v3, (v, idx) => chunkRelOf(metas(v), idx))
       (newVals, tailShape)
     }
 
@@ -1311,7 +1097,7 @@ object ZarrGrid extends Serializable {
     writeFile(metaRel(d0), d0meta.getBytes("UTF-8"))
     newEntries += (metaRel(d0) -> d0meta)
     val d0m = arrayMeta(spark, dir, d0, Map.empty) // re-read PATCHED meta
-    writeFile(s"$d0/${chunkRelOfN(d0m, Seq(0))}",
+    writeFile(s"$d0/${chunkRelOf(d0m, Seq(0))}",
       encodeChunk(doubleLeBytes(newAxis0), comp, v3))
     varNames.foreach { v =>
       val patched = patchShape(metaJson(spark, dir, metaRel(v), cons),
@@ -1351,18 +1137,16 @@ object ZarrGrid extends Serializable {
     }
   }
 
-  /** Read a whole xarray-shaped zarr store: data variables are the 2-d
-    * arrays, their dims come from `.zattrs` `_ARRAY_DIMENSIONS` (all 2-d
-    * variables must share one (y, x) dim pair), coordinates are the dims'
-    * own 1-d arrays. This is the `ConfigExpr.load` `.zarr` dispatch
-    * target — `xr.open_zarr(...).to_dataframe().reset_index()`.
+  /** Read a whole xarray-shaped zarr store: data variables are the
+    * arrays of the highest rank (>= 2), their dims come from `.zattrs`
+    * `_ARRAY_DIMENSIONS` or `dimension_names` (all data variables must
+    * share one dim tuple), coordinates are the dims' own 1-d arrays; a
+    * 2-d store reads as (x, y, vars...). This is the `ConfigExpr.load`
+    * `.zarr` dispatch target — `xr.open_zarr(...).to_dataframe().reset_index()`.
     */
   def readStore(spark: SparkSession, dir: String): DataFrame = {
     val (dims, dataVars) = storeLayout(spark, dir)
-    if (dims.length == 2) {
-      val Seq(yDim, xDim) = dims
-      readGrid2d(spark, dir, xDim, yDim, dataVars)
-    } else readGridNd(spark, dir, dims, dataVars)
+    xFirst(readGridNd(spark, dir, dims, dataVars), dims, dataVars)
   }
 
   /** The store's dim names in C-order (one consolidated-metadata read on
@@ -1447,8 +1231,6 @@ object ZarrGrid extends Serializable {
     */
   def toBlosc(spark: SparkSession, arrDir: String, cname: String = "lz4",
               byteShuffle: Boolean = true): Unit = {
-    val meta = parseZarray(new String(readSmall(spark, s"$arrDir/.zarray"), "UTF-8"), arrDir)
-    val typesize = dtypeSize(meta.dtype, arrDir)
     val codec = cname match {
       case "blosclz" => BloscLite.CodecBloscLz
       case "lz4" | "lz4hc" => BloscLite.CodecLz4
@@ -1456,59 +1238,10 @@ object ZarrGrid extends Serializable {
       case o => throw new IllegalArgumentException(
         s"blosc cname '$o' not supported (blosclz/lz4/zlib)")
     }
-    val fs = fsFor(spark, arrDir)
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(p).toSeq.filterNot(_.getPath.getName.startsWith(".")).flatMap { s =>
-        if (s.isDirectory) walk(s.getPath) else Seq(s.getPath)
-      }
-    walk(new org.apache.hadoop.fs.Path(arrDir)).foreach { p =>
-      val len = fs.getFileStatus(p).getLen.toInt
-      val raw = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, raw) finally in.close()
-      // decode with the CURRENT compressor to plain bytes, re-frame as blosc
-      val plain = meta.comp match {
-        case "none" => raw
-        case "blosc" => BloscLite.decompress(raw, p.toString)
-        case "zstd" => ZstdLite.decompress(raw, p.toString)
-        case "zlib" =>
-          val inf = new java.util.zip.Inflater()
-          inf.setInput(raw)
-          val o = new java.io.ByteArrayOutputStream(raw.length * 3 + 64)
-          val tmp = new Array[Byte](8192)
-          while (!inf.finished()) {
-            val got = inf.inflate(tmp)
-            if (got == 0 && inf.needsInput())
-              throw new IllegalArgumentException(s"$p: truncated zlib chunk")
-            o.write(tmp, 0, got)
-          }
-          inf.end()
-          o.toByteArray
-      }
-      val framed = BloscLite.compress(plain, typesize, codec, byteShuffle = byteShuffle)
-      val out = fs.create(p, true)
-      try out.write(framed) finally out.close()
-    }
-    val zaPath = s"$arrDir/.zarray"
-    val patched = JsonMethods.parse(new String(readSmall(spark, zaPath), "UTF-8"))
-      .transformField { case ("compressor", _) =>
-        ("compressor", JsonMethods.parse(
-          s"""{"id":"blosc","cname":"$cname","clevel":5,"shuffle":${if (byteShuffle) 1 else 0},"blocksize":0}"""))
-      }
-    val patchedJson = JsonMethods.compact(JsonMethods.render(patched))
-    val out = fs.create(new org.apache.hadoop.fs.Path(zaPath), true)
-    try out.write(patchedJson.getBytes("UTF-8"))
-    finally out.close()
-    // keep the store's consolidated metadata in sync (a stale .zmetadata
-    // would make consolidated readers decode with the OLD compressor)
-    val slash = arrDir.stripSuffix("/").lastIndexOf('/')
-    val (storeDir, arrName) = (arrDir.substring(0, slash), arrDir.substring(slash + 1))
-    val zmPath = new org.apache.hadoop.fs.Path(s"$storeDir/.zmetadata")
-    if (fs.exists(zmPath)) {
-      val entries = consolidated(spark, storeDir) + (s"$arrName/.zarray" -> patchedJson)
-      val o2 = fs.create(zmPath, true)
-      try o2.write(consolidatedJson(entries.toSeq).getBytes("UTF-8")) finally o2.close()
-    }
+    recompress(spark, arrDir,
+      s"""{"id":"blosc","cname":"$cname","clevel":5,"shuffle":${if (byteShuffle) 1 else 0},"blocksize":0}""",
+      (plain, meta) => BloscLite.compress(plain, dtypeSize(meta.dtype, arrDir), codec,
+        byteShuffle = byteShuffle))
   }
 
   /** Re-encode one array's chunk files as bare zstd frames and declare
@@ -1517,7 +1250,17 @@ object ZarrGrid extends Serializable {
     * in ZstdSpec decodes them with the real zstd CLI). Keeps
     * `.zmetadata` in sync like [[toBlosc]].
     */
-  def toZstd(spark: SparkSession, arrDir: String): Unit = {
+  def toZstd(spark: SparkSession, arrDir: String): Unit =
+    recompress(spark, arrDir, """{"id":"zstd","level":5}""", (plain, _) => ZstdLite.compress(plain))
+
+  /** Rewrite every chunk file of one zarr v2 array as `encode(plain bytes,
+    * array meta)` after undoing its current compressor, then declare
+    * `compressorJson` in its `.zarray` and keep the store's consolidated
+    * metadata in sync (a stale `.zmetadata` would make consolidated
+    * readers decode with the OLD compressor).
+    */
+  private def recompress(spark: SparkSession, arrDir: String, compressorJson: String,
+                         encode: (Array[Byte], ZMeta) => Array[Byte]): Unit = {
     val meta = parseZarray(new String(readSmall(spark, s"$arrDir/.zarray"), "UTF-8"), arrDir)
     val fs = fsFor(spark, arrDir)
     def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
@@ -1525,35 +1268,14 @@ object ZarrGrid extends Serializable {
         if (s.isDirectory) walk(s.getPath) else Seq(s.getPath)
       }
     walk(new org.apache.hadoop.fs.Path(arrDir)).foreach { p =>
-      val len = fs.getFileStatus(p).getLen.toInt
-      val raw = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, raw) finally in.close()
-      val plain = meta.comp match {
-        case "none" => raw
-        case "blosc" => BloscLite.decompress(raw, p.toString)
-        case "zstd" => ZstdLite.decompress(raw, p.toString)
-        case "zlib" =>
-          val inf = new java.util.zip.Inflater()
-          inf.setInput(raw)
-          val o = new java.io.ByteArrayOutputStream(raw.length * 3 + 64)
-          val tmp = new Array[Byte](8192)
-          while (!inf.finished()) {
-            val got = inf.inflate(tmp)
-            if (got == 0 && inf.needsInput())
-              throw new IllegalArgumentException(s"$p: truncated zlib chunk")
-            o.write(tmp, 0, got)
-          }
-          inf.end()
-          o.toByteArray
-      }
+      val plain = decompress(readSmall(spark, p.toString), meta.comp, p.toString)
       val out = fs.create(p, true)
-      try out.write(ZstdLite.compress(plain)) finally out.close()
+      try out.write(encode(plain, meta)) finally out.close()
     }
     val zaPath = s"$arrDir/.zarray"
     val patched = JsonMethods.parse(new String(readSmall(spark, zaPath), "UTF-8"))
       .transformField { case ("compressor", _) =>
-        ("compressor", JsonMethods.parse("""{"id":"zstd","level":5}"""))
+        ("compressor", JsonMethods.parse(compressorJson))
       }
     val patchedJson = JsonMethods.compact(JsonMethods.render(patched))
     val out = fs.create(new org.apache.hadoop.fs.Path(zaPath), true)
@@ -1581,79 +1303,9 @@ object ZarrGrid extends Serializable {
                              compressor: String = "zlib", zarrFormat: Int = 2,
                              shardInnerRows: Int = 0): Unit = {
     require(chunkRows > 0, "chunkRows must be positive")
-    require(zarrFormat == 2 || zarrFormat == 3, s"zarrFormat $zarrFormat (2 or 3)")
-    require(shardInnerRows == 0 || zarrFormat == 3, "sharding is a zarr v3 feature")
-    val spark = df.sparkSession
-    GridAxes.withPersisted(df) {
-    // axes: grid-axis-sized driver work (the only driver-side data), both
-    // axes + row count in ONE job (was 3 input passes)
-    val (axesXY, total) = GridAxes.axesAndCount(df, Seq(xCol, yCol))
-    val xs = axesXY(0)
-    val ys = axesXY(1)
-    require(total == xs.length.toLong * ys.length,
-      s"rows $total != full ${xs.length} x ${ys.length} lattice (duplicates or gaps)")
-    val cr = math.min(chunkRows, ys.length)
-    val nChunks = (ys.length + cr - 1) / cr
-    require(shardInnerRows == 0 || cr % shardInnerRows == 0,
-      s"shardInnerRows $shardInnerRows must divide chunkRows $cr")
-    val shardInner = if (shardInnerRows > 0) Seq(shardInnerRows, xs.length) else Nil
-
-    // metadata + coordinate arrays (tiny, driver-side, via the Hadoop FS
-    // API so the sink targets local paths, HDFS, or object stores alike)
-    writeMetaNd(spark, dir, Seq(yCol, xCol), Seq(ys, xs), varNames,
-      Seq(cr, xs.length), compressor, zarrFormat, shardInner)
-
-    val xIdx = xs.zipWithIndex.toMap
-    val yIdx = ys.zipWithIndex.toMap
-    val width = xs.length
-    val dirB = dir
-    val vars = varNames
-    val compB = compressor
-    val v3B = zarrFormat == 3
-    val shardB = shardInner
-    // tasks write with the SESSION's Hadoop conf (credentials, fs.* tuning)
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    df.select((Seq(xCol, yCol) ++ varNames).map(col): _*)
-      .repartition(nChunks, udfYchunk(yIdx, cr)(col(yCol)))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        // assemble the partition's chunk bands (hash may co-locate several)
-        val bands = scala.collection.mutable.Map.empty[Int, Array[Array[Double]]]
-        rows.foreach { r =>
-          val ix = xIdx(r.getDouble(0))
-          val iy = yIdx(r.getDouble(1))
-          val ci = iy / cr
-          val band = bands.getOrElseUpdate(ci, Array.fill(vars.length)(new Array[Double](cr * width)))
-          var v = 0
-          while (v < vars.length) {
-            band(v)((iy - ci * cr) * width + ix) = r.getDouble(2 + v)
-            v += 1
-          }
-        }
-        if (bands.nonEmpty) {
-          val conf = confB.value.value
-          bands.foreach { case (ci, band) =>
-            vars.indices.foreach { v =>
-              val p = new org.apache.hadoop.fs.Path(
-                s"$dirB/${vars(v)}/${chunkKey(Seq(ci, 0), v3B)}")
-              val fs = rawFs(p.toString, conf)
-              val out = fs.create(p, true)
-              val payload =
-                if (shardB.nonEmpty)
-                  encodeShard(doubleLeBytes(band(v)), Seq(cr, width), shardB, compB)
-                else encodeChunk(doubleLeBytes(band(v)), compB, v3B)
-              try out.write(payload) finally out.close()
-            }
-          }
-        }
-      }
-    }
+    writeDistributed(df, dir, Seq(yCol, xCol), varNames, chunkRows, compressor, zarrFormat,
+      shardInnerRows)
   }
-
-  // row -> chunk-band index (used only to co-locate a band's rows)
-  private def udfYchunk(yIdx: Map[Double, Int], cr: Int) =
-    udf((y: Double) => yIdx(y) / cr)
 
   /** Encode one chunk under the named compressor: "zlib" (this writer's
     * historical default), "blosc" (the zarr ecosystem default — shuffled
@@ -1766,17 +1418,6 @@ object ZarrGrid extends Serializable {
     vals.foreach(bb.putDouble)
     bb.array()
   }
-
-  /** `.zgroup`, coordinate arrays, and per-variable `.zarray`/`.zattrs`
-    * for a (ys x xs) grid chunked in row bands of `cr` — written through
-    * the Hadoop FileSystem API (works on any fs.* scheme, not only local).
-    */
-  private def writeMeta(spark: SparkSession, dir: String, xCol: String, yCol: String,
-                        varNames: Seq[String], xs: Array[Double], ys: Array[Double],
-                        cr: Int, compressor: String = "zlib",
-                        zarrFormat: Int = 2): Unit =
-    writeMetaNd(spark, dir, Seq(yCol, xCol), Seq(ys, xs), varNames,
-      Seq(cr, xs.length), compressor, zarrFormat)
 
   /** Rank-generic metadata + coordinate-array writer behind every grid
     * sink: dims in C-order (slowest-varying first — `(t, y, x)` for the
@@ -1904,7 +1545,8 @@ object ZarrGrid extends Serializable {
     val yIdx = ys.zipWithIndex.toMap
     val cr = if (chunkRows > 0) math.min(chunkRows, ys.length) else ys.length
     val spark = df.sparkSession
-    writeMeta(spark, dir, xCol, yCol, varNames, xs, ys, cr, compressor, zarrFormat)
+    writeMetaNd(spark, dir, Seq(yCol, xCol), Seq(ys, xs), varNames, Seq(cr, xs.length),
+      compressor, zarrFormat)
 
     val fs = fsFor(spark, dir)
     varNames.zipWithIndex.foreach { case (v, vi) =>

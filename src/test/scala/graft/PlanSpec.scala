@@ -3,7 +3,6 @@ package graft
 import graft.core.ConfigExpr
 import graft.core.ConfigExpr.{DataConfig, Where}
 import graft.operators.{Binning, SpatialJoin}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -43,53 +42,6 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
     assert(countOf(plan, "Exchange hashpartitioning") === 0,
       s"observation side must not shuffle:\n$plan")
-  }
-
-  test("bucketed co-located join: zero Exchange on either side") {
-    val dir = Files.createTempDirectory("graft_bucket_").toString
-    val a = Seq.tabulate(100)(i => (i.toLong, i * 2.0)).toDF("k", "va")
-    val b = Seq.tabulate(100)(i => (i.toLong, i * 3.0)).toDF("k", "vb")
-    graft.io.Bucketed.writeBucketed(a, "graft_bucket_a", "k", 4, Some(s"$dir/a"))
-    graft.io.Bucketed.writeBucketed(b, "graft_bucket_b", "k", 4, Some(s"$dir/b"))
-    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = graft.io.Bucketed.joinBucketed(spark, "graft_bucket_a", "graft_bucket_b", "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ over bucketed scans:\n$plan")
-      assert(countOf(plan, "Exchange hashpartitioning") === 0,
-        s"bucketed join must not shuffle either side:\n$plan")
-      assert(joined.count() === 100)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-      spark.sql("DROP TABLE IF EXISTS graft_bucket_a")
-      spark.sql("DROP TABLE IF EXISTS graft_bucket_b")
-    }
-  }
-
-  test("cell-prefix range partitioning clusters space and prunes the scan") {
-    import graft.operators.Partitioning
-    val obs = Seq.tabulate(2000)(i => ((i * 7919 % 1000) * 1000.0, (i * 104729 % 1000) * 1000.0))
-      .toDF("x", "y")
-    val parted = Partitioning.byCellPrefix(obs, "x", "y",
-      res = 50000.0, x0 = 0.0, y0 = 0.0, level = 2, numPartitions = 8)
-    // each partition holds a CONTIGUOUS prefix range: ranges must not overlap
-    val ranges = parted.select("cell_prefix").rdd
-      .mapPartitions(it => { val v = it.map(_.getLong(0)).toSeq
-        if (v.isEmpty) Iterator.empty else Iterator.single((v.min, v.max)) })
-      .collect().sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) => assert(hi <= lo2, s"overlapping ranges: $hi > $lo2")
-      case _ =>
-    }
-    // persisted prefix column prunes: filter pushes to the parquet scan
-    val dir = Files.createTempDirectory("graft_prefix_").toString
-    parted.write.mode("overwrite").parquet(s"$dir/obs.parquet")
-    val scan = spark.read.parquet(s"$dir/obs.parquet")
-      .filter(col("cell_prefix") === ranges.head._1).select("x", "y")
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters:") && plan.contains("EqualTo(cell_prefix"),
-      s"prefix filter not pushed:\n$plan")
   }
 
   test("flagship OI plan: both radius joins broadcast; only the two cogroup-side shuffles") {
