@@ -128,11 +128,11 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
 
     // A = L^-1 Kuf / sigma  (L = U^T)
     val aMat = kuf.clone()
-    blas.dtrsm("L", "U", "T", "N", m, n, 1.0 / sigma, kuu, 0, m, aMat, 0, m)
+    FastSpd.trsmLUT(m, n, 1.0 / sigma, kuu, 0, m, aMat, 0, m)
 
-    // B = I + A A^T (upper filled by dsyrk; mirror for potrs/potri use)
+    // B = I + A A^T (upper filled by syrkUN; mirror for potrs/potri use)
     val b = new Array[Double](m * m + m)
-    blas.dsyrk("U", "N", m, n, 1.0, aMat, 0, m, 0.0, b, 0, m)
+    FastSpd.syrkUN(m, n, 1.0, aMat, 0, m, 0.0, b, 0, m)
     var trAAT = 0.0
     var i = 0
     while (i < m) { trAAT += b(i + i * m); b(i + i * m) += 1.0; i += 1 }
@@ -149,7 +149,7 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
     val ay = new Array[Double](m)
     blas.dgemv("N", m, n, 1.0, aMat, 0, m, yArr, 0, 1, 0.0, ay, 0, 1)
     val c = ay.clone()
-    blas.dtrsm("L", "U", "T", "N", m, 1, 1.0 / sigma, ub, 0, m, c, 0, m)
+    FastSpd.trsmLUT(m, 1, 1.0 / sigma, ub, 0, m, c, 0, m)
 
     val yTy = blas.ddot(n, yArr, 1, yArr, 1)
     val cTc = blas.ddot(m, c, 1, c, 1)
@@ -170,7 +170,7 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
 
     // P = sigma * U^-1 A ; Z = B^-1 A ; R = (P - (P A^T) Z)/s
     val pMat = aMat.clone()
-    blas.dtrsm("L", "U", "N", "N", m, n, sigma, kuu, 0, m, pMat, 0, m)
+    FastSpd.trsmLUN(m, n, sigma, kuu, 0, m, pMat, 0, m)
     val zMat = aMat.clone()
     FastSpd.potrsUpper(ub, m, zMat, n)
     val pat = new Array[Double](m * m)
@@ -306,16 +306,16 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
     require(FastSpd.potrfUpper(kuu, m) == 0, "Cholesky of Kuu failed in predict")
     val kuf = buildKuf(inv2l, sf2)
     val aMat = kuf
-    blas.dtrsm("L", "U", "T", "N", m, n, 1.0 / sigma, kuu, 0, m, aMat, 0, m)
+    FastSpd.trsmLUT(m, n, 1.0 / sigma, kuu, 0, m, aMat, 0, m)
     val b = new Array[Double](m * m + m)
-    blas.dsyrk("U", "N", m, n, 1.0, aMat, 0, m, 0.0, b, 0, m)
+    FastSpd.syrkUN(m, n, 1.0, aMat, 0, m, 0.0, b, 0, m)
     var i = 0
     while (i < m) { b(i + i * m) += 1.0; i += 1 }
     require(FastSpd.potrfUpper(b, m) == 0, "Cholesky of B failed in predict")
     val ay = new Array[Double](m)
     blas.dgemv("N", m, n, 1.0, aMat, 0, m, yArr, 0, 1, 0.0, ay, 0, 1)
     val c = ay
-    blas.dtrsm("L", "U", "T", "N", m, 1, 1.0 / sigma, b, 0, m, c, 0, m)
+    FastSpd.trsmLUT(m, 1, 1.0 / sigma, b, 0, m, c, 0, m)
 
     val mStar = xs.rows
     // Kus (m x mStar), tmp1 = L^-1 Kus, tmp2 = LB^-1 tmp1
@@ -335,9 +335,9 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
       j += 1
     }
     val tmp1 = kus.clone()
-    blas.dtrsm("L", "U", "T", "N", m, mStar, 1.0, kuu, 0, m, tmp1, 0, m)
+    FastSpd.trsmLUT(m, mStar, 1.0, kuu, 0, m, tmp1, 0, m)
     val tmp2 = tmp1.clone()
-    blas.dtrsm("L", "U", "T", "N", m, mStar, 1.0, b, 0, m, tmp2, 0, m)
+    FastSpd.trsmLUT(m, mStar, 1.0, b, 0, m, tmp2, 0, m)
 
     val fs = new Array[Double](mStar)
     val fsVar = new Array[Double](mStar)

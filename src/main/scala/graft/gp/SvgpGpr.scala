@@ -179,7 +179,7 @@ final class SvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
 
     // d(-ELBO)/dL = rho/s (P P^T) L + W L - diag(1/L_ii), lower triangle
     val ppt = new Array[Double](m * m)
-    blas.dsyrk("U", "N", m, bs, 1.0, pMat, 0, m, 0.0, ppt, 0, m)
+    FastSpd.syrkUN(m, bs, 1.0, pMat, 0, m, 0.0, ppt, 0, m)
     i = 0
     while (i < m) { var k = i + 1; while (k < m) { ppt(k + i * m) = ppt(i + k * m); k += 1 }; i += 1 }
     val pptL = new Array[Double](m * m)

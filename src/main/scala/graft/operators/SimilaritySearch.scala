@@ -371,10 +371,14 @@ object SimilaritySearch {
   }
 
   /** [[sqCodesExpr]]: Spark `round(x, 0)` is BigDecimal HALF_UP (NOT
-    * Math.round), then a truncating double->int cast.
+    * Math.round), then a truncating double->int cast. The vector must have
+    * one element per trained bound.
     */
   private def sqCodesKernel(vec: Array[Double], mins: Array[Double],
-                            maxs: Array[Double]): Array[Int] = {
+                            maxs: Array[Double], vecCol: String): Array[Int] = {
+    require(vec.length == mins.length,
+      s"$vecCol: embedding vector of length ${vec.length}, expected ${mins.length} " +
+        "(SQ8 bounds)")
     val n = vec.length
     val codes = new Array[Int](n)
     var i = 0
@@ -736,7 +740,7 @@ object SimilaritySearch {
       StructField("recon_norm2", DoubleType)))
     it.mapPartitions { rows =>
       rows.map { r =>
-        val codes = sqCodesKernel(vectorAt(r, vecCol, mn.length), mn, mx)
+        val codes = sqCodesKernel(vectorAt(r, vecCol, mn.length), mn, mx, vecCol)
         Row(r.get(0), codes.toSeq, sqReconNorm2Kernel(codes, mn, mx))
       }
     }(Encoders.row(outSchema))
@@ -819,7 +823,7 @@ object SimilaritySearch {
       rows.map { r =>
         val v = vectorAt(r, vecCol, mn.length)
         val bi = nearestIdxKernel(centVecs, v)
-        val codes = sqCodesKernel(v, mn, mx)
+        val codes = sqCodesKernel(v, mn, mx, vecCol)
         Row(r.get(0), if (bi < 0) Long.MaxValue else centIds(bi),
           codes.toSeq, sqReconNorm2Kernel(codes, mn, mx))
       }

@@ -60,4 +60,27 @@ class SimilarityInputSpec extends AnyFunSuite with SparkTestBase {
     val msg = failure(SimilaritySearch.pqEncode(df, "id", "emb", codebook).collect())
     assert(msg.contains("emb: embedding vector of length 3, expected 4"), msg)
   }
+
+  /** sqEncode and ivfSqTopK on items whose third vector is `bad`, against
+    * 4-dim SQ8 bounds: each must fail naming the column and dimension. */
+  private def assertSqLengthFails(bad: Option[Seq[Option[Double]]], len: Int): Unit = {
+    val df = items(bad)
+    val bounds = (Seq.fill(4)(0.0), Seq.fill(4)(1.0))
+    val queries = Seq((7L, Seq(0.5, 0.5, 0.5, 0.5))).toDF("qid", "emb")
+    for (run <- Seq[() => Any](
+      () => SimilaritySearch.sqEncode(df, "id", "emb", bounds._1, bounds._2).collect(),
+      () => SimilaritySearch.ivfSqTopK(df, queries, "id", "emb", "qid", k = 2, nlist = 2,
+        nprobe = 1, bounds = Some(bounds)).collect())) {
+      val msg = failure(run())
+      assert(msg.contains(s"emb: embedding vector of length $len, expected 4"), msg)
+    }
+  }
+
+  test("a vector shorter than the SQ8 bounds fails naming the column and dimension") {
+    assertSqLengthFails(vec(0.5, 0.5, 0.5), 3)
+  }
+
+  test("a vector longer than the SQ8 bounds fails naming the column and dimension") {
+    assertSqLengthFails(vec(0.5, 0.5, 0.5, 0.5, 0.5), 5)
+  }
 }
