@@ -14,7 +14,7 @@ object LbfgsGoldenFixtures {
 
   /** n points strictly inside (0, 1)^d on a deterministic low-discrepancy
     * walk, with a smooth signal plus small structured noise. */
-  private def data(n: Int, d: Int): (DenseMatrix[Double], DenseVector[Double]) = {
+  def data(n: Int, d: Int): (DenseMatrix[Double], DenseVector[Double]) = {
     val x = DenseMatrix.tabulate[Double](n, d)((i, k) =>
       0.03 + 0.94 * (((i + 1) * (37 + 24 * k) % 101) / 101.0))
     val y = DenseVector.tabulate[Double](n) { i =>
