@@ -13,13 +13,8 @@ import graft.gp.DenseOps._
   * features, so Kuf has exactly 3 nonzeros per point per dim and Kuu is
   * banded (bandwidth 2) instead of diagonal-plus-rank-one.
   *
-  * Collapsed bound: identical in form to VffGpr (vff.py:612-645):
-  *   P = Kuf Kfu / s + Kuu,  L = chol(P),  c = L^-1 (Kuf y) / s
-  *   elbo = -n/2 log(2 pi s) - 1/2 logdet P + 1/2 logdet Kuu
-  *          - (y^T y)/(2s) + (c^T c)/2 - (sum_i kdiag_i)/(2s)
-  *          + (sum Kuu^-1 o Kuf Kfu)/(2s)
-  *
-  * What changes vs VFF is the feature algebra:
+  * The collapsed bound, optimiser and predictor are VFF's, shared through
+  * [[InterDomainGpr]]. What changes vs VFF is the feature algebra:
   *  - Kuf[i, x] = phi_i(x) (the spline evaluated at x) by the reproducing
   *    property — B2 splines are C^1 piecewise quadratics, members of the
   *    Matern-3/2 RKHS on [a, b];
@@ -35,32 +30,43 @@ import graft.gp.DenseOps._
   *    whole inner product against the reproducing property
   *    <k(z,.), phi_j>_H == phi_j(z) by fine quadrature.)
   *
-  * Like VFF, Kuf depends only on coordinates: Kuf y and Kuf Kfu are
-  * precomputed once and every hyperparameter evaluation is O(M_total^3),
-  * independent of n — FD gradients over the 2D+1 hypers are the pragmatic
-  * optimiser. At 100-TB scale the per-tile cost profile is the same as
-  * VffGpr's; the banded structure is additionally the right starting point
+  * At 100-TB scale the per-tile cost profile is the same as VffGpr's
+  * (O(M_total^3) per evaluation, independent of n); the banded structure
+  * is additionally the right starting point
   * for a future O(M) sparse path (the ASVGP paper's headline), which this
   * dense-at-tile-scale implementation does not need at M <= a few hundred.
+  *
+  * Prediction points should lie inside [a, b] (TileModels builds the
+  * domain with a full-span margin, so local prediction grids always do);
+  * outside, the spline features vanish and the posterior reverts to the
+  * prior — sane, but not the exact inter-domain projection.
   *
   * @param ms per-dim B-spline feature count (>= 3)
   * @param a,b per-dim domain; training coords must lie inside
   */
-final class AsvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
-                     ms: Array[Int], a: Array[Double], b: Array[Double]) {
-  require(coords.rows == y.length, "coords/obs length mismatch")
-  val n: Int = coords.rows
-  val d: Int = coords.cols
-  require(ms.length == d && a.length == d && b.length == d, "per-dim ms/a/b required")
-  (0 until d).foreach { k =>
+final class AsvgpGpr private (coords: DenseMatrix[Double], y: DenseVector[Double],
+                             ms: Array[Int], a: Array[Double], b: Array[Double],
+                             splines: BSplineBasis)
+    extends InterDomainGpr(coords, y, ms, a, b, splines) {
+  def this(coords: DenseMatrix[Double], y: DenseVector[Double],
+           ms: Array[Int], a: Array[Double], b: Array[Double]) =
+    this(coords, y, ms, a, b, new BSplineBasis(ms, a, b))
+
+  private[gp] def phi(k: Int, i: Int, x: Double): Double = splines.phi(k, i, x)
+  private[gp] def phiD1(k: Int, i: Int, x: Double): Double = splines.phiD1(k, i, x)
+  private[gp] def phiD2(k: Int, i: Int, x: Double): Double = splines.phiD2(k, i, x)
+  private[gp] def rkhsInner(k: Int, i: Int, j: Int, ell: Double, varK: Double): Double =
+    splines.rkhsInner(k, i, j, ell, varK)
+}
+
+/** ASVGP's per-dim quadratic B-spline basis on [a_d, b_d]. */
+private[gp] final class BSplineBasis(ms: Array[Int], a: Array[Double], b: Array[Double])
+    extends InterDomainBasis {
+  def checkDim(k: Int): Unit = {
     require(ms(k) >= 3, "need at least 3 B-spline features per dim")
     require(b(k) > a(k), "empty domain")
-    (0 until n).foreach(i => require(coords(i, k) > a(k) && coords(i, k) < b(k),
-      s"training coords must lie strictly inside the domain (dim $k)"))
   }
-
-  private val Log2Pi = math.log(2.0 * math.Pi)
-  val mTotal: Int = ms.product
+  def size(k: Int): Int = ms(k)
 
   /** per-dim knot spacing: m splines, spline i supported on
     * [a + (i-2)h, a + (i+1)h]; the m supports tile [a, b] with ~3 splines
@@ -86,18 +92,18 @@ final class AsvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     else 1.0
 
   /** phi_i and derivatives in dim k. */
-  private[gp] def phi(k: Int, i: Int, x: Double): Double = {
+  def phi(k: Int, i: Int, x: Double): Double = {
     val h = hOf(k); b2((x - (a(k) + (i - 2) * h)) / h)
   }
-  private[gp] def phiD1(k: Int, i: Int, x: Double): Double = {
+  def phiD1(k: Int, i: Int, x: Double): Double = {
     val h = hOf(k); b2d1((x - (a(k) + (i - 2) * h)) / h) / h
   }
-  private[gp] def phiD2(k: Int, i: Int, x: Double): Double = {
+  def phiD2(k: Int, i: Int, x: Double): Double = {
     val h = hOf(k); b2d2((x - (a(k) + (i - 2) * h)) / h) / (h * h)
   }
 
   /** per-dim feature matrix (m_d x cols): spline evaluations. */
-  private def kufDim(k: Int, xs: Int => Double, cols: Int): DenseMatrix[Double] = {
+  def features(k: Int, xs: Int => Double, cols: Int): DenseMatrix[Double] = {
     val out = DenseMatrix.zeros[Double](ms(k), cols)
     var j = 0
     while (j < cols) {
@@ -109,19 +115,12 @@ final class AsvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     out
   }
 
-  // static precomputes (hyper-independent)
-  private val kuf: DenseMatrix[Double] =
-    kvs((0 until d).map(k => kufDim(k, i => coords(i, k), n)))
-  private val kufY: DenseVector[Double] = kuf * y
-  private val kufKfu: DenseMatrix[Double] = kuf * kuf.t
-  private val trYTY: Double = y dot y
-
   // 3-point Gauss-Legendre nodes/weights on [-1, 1] (exact to degree 5)
   private val GlX = Array(-math.sqrt(0.6), 0.0, math.sqrt(0.6))
   private val GlW = Array(5.0 / 9.0, 8.0 / 9.0, 5.0 / 9.0)
 
   /** Matern-3/2 RKHS inner product <phi_i, phi_j>_H on [a_k, b_k]. */
-  private[gp] def rkhsInner(k: Int, i: Int, j: Int, ell: Double, varK: Double): Double = {
+  def rkhsInner(k: Int, i: Int, j: Int, ell: Double, varK: Double): Double = {
     val lam = math.sqrt(3.0) / ell
     val h = hOf(k)
     def lOp(idx: Int, x: Double): Double =
@@ -155,7 +154,7 @@ final class AsvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
   }
 
   /** per-dim Kuu (banded: |i-j| > 2 is exactly 0) + inverse + logdet. */
-  private def kuuDim(k: Int, ell: Double, varK: Double)
+  def kuu(k: Int, ell: Double, varK: Double)
   : (DenseMatrix[Double], DenseMatrix[Double], Double) = {
     val m = ms(k)
     val kuu = DenseMatrix.zeros[Double](m, m)
@@ -176,95 +175,5 @@ final class AsvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     // inv = L^-T L^-1 via m solves of the identity
     val inv = upperSolve(l, lowerSolve(l, DenseMatrix.eye[Double](m)))
     (kuu, inv, logdet)
-  }
-
-  /** packed hyper vector: [ell_1..ell_d, var_1..var_d, s]. */
-  def nHypers: Int = 2 * d + 1
-
-  /** negative ELBO (the minimised objective). */
-  def negElbo(h: Array[Double]): Double = {
-    require(h.length == nHypers)
-    val s = h(2 * d)
-    if (s <= 0 || (0 until d).exists(k => h(k) <= 0 || h(d + k) <= 0))
-      return Double.PositiveInfinity
-    try {
-      val dims = (0 until d).map(k => kuuDim(k, h(k), h(d + k)))
-      val kuu = kron(dims.map(_._1))
-      val kuuInv = kron(dims.map(_._2))
-      val kuuLogdet = (0 until d).map(k => (mTotal.toDouble / ms(k)) * dims(k)._3).sum
-
-      val p = (kufKfu / s) + kuu
-      val l = breeze.linalg.cholesky(p)
-      var logdetP = 0.0
-      var i = 0
-      while (i < mTotal) { logdetP += 2.0 * math.log(l(i, i)); i += 1 }
-      val c = lowerSolve(l, kufY) / s
-      val cTc = c dot c
-      var trKiK = 0.0
-      i = 0
-      while (i < mTotal) {
-        var j = 0
-        while (j < mTotal) { trKiK += kuuInv(i, j) * kufKfu(i, j); j += 1 }
-        i += 1
-      }
-      val kdiagSum = n * (0 until d).map(k => h(d + k)).product
-      val elbo = -0.5 * n * math.log(2.0 * math.Pi * s) - 0.5 * logdetP + 0.5 * kuuLogdet -
-        0.5 * trYTY / s + 0.5 * cTc - 0.5 * kdiagSum / s + 0.5 * trKiK / s
-      -elbo
-    } catch { case _: Exception => Double.PositiveInfinity }
-  }
-
-  /** L-BFGS in bijector space with central-difference gradients — each
-    * evaluation is O(M_total^3), independent of n (see VffGpr.optimise).
-    * Returns (hypers, objective, converged, iterationsActuallyRun).
-    */
-  def optimise(init: Array[Double], bijectors: Array[Bijector],
-               maxIter: Int = 60, tolerance: Double = 1e-7): (Array[Double], Double, Boolean, Int) = {
-    require(bijectors.length == nHypers)
-    BijectedLbfgs.minimise(init, bijectors, negElbo, BijectedLbfgs.centralDiff(negElbo),
-      maxIter, tolerance)
-  }
-
-  /** Posterior prediction (collapsed q(u), same algebra as VffGpr.predict).
-    * Prediction points should lie inside [a, b] (TileModels builds the
-    * domain with a full-span margin, so local prediction grids always do);
-    * outside, the spline features vanish and the posterior reverts to the
-    * prior — sane, but not the exact inter-domain projection.
-    */
-  def predict(xs: DenseMatrix[Double], hyp: Array[Double]): GprPrediction = {
-    val s = hyp(2 * d)
-    val dims = (0 until d).map(k => kuuDim(k, hyp(k), hyp(d + k)))
-    val kuu = kron(dims.map(_._1))
-    val kuuInv = kron(dims.map(_._2))
-    val p = (kufKfu / s) + kuu
-    val l = breeze.linalg.cholesky(p)
-    val c = lowerSolve(l, kufY) / s
-
-    val mStar = xs.rows
-    val kus = kvs((0 until d).map(k => kufDim(k, j => xs(j, k), mStar)))
-    val tmp = lowerSolve(l, kus)
-    val kiKus = kuuInv * kus
-    val varPrior = (0 until d).map(k => hyp(d + k)).product
-    val fs = new Array[Double](mStar)
-    val fsVar = new Array[Double](mStar)
-    val yVar = new Array[Double](mStar)
-    var j = 0
-    while (j < mStar) {
-      var mean = 0.0
-      var t2 = 0.0
-      var t3 = 0.0
-      var i = 0
-      while (i < mTotal) {
-        mean += tmp(i, j) * c(i)
-        t2 += tmp(i, j) * tmp(i, j)
-        t3 += kiKus(i, j) * kus(i, j)
-        i += 1
-      }
-      fs(j) = mean
-      fsVar(j) = varPrior + t2 - t3
-      yVar(j) = fsVar(j) + s
-      j += 1
-    }
-    GprPrediction(fs, fsVar, yVar)
   }
 }

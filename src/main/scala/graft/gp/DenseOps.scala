@@ -2,11 +2,29 @@ package graft.gp
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 
-/** Dense triangular solves against a lower Cholesky factor L, and the
-  * Kronecker / Khatri-Rao products of the inter-domain models. Plain loops
-  * in a fixed order, so every caller gets bit-identical results.
+/** Dense triangular solves against a lower Cholesky factor L, the dense
+  * Cholesky NLML, and the Kronecker / Khatri-Rao products of the
+  * inter-domain models. Plain loops in a fixed order, so every caller gets
+  * bit-identical results.
   */
 private[gp] object DenseOps {
+
+  private val Log2Pi = math.log(2.0 * math.Pi)
+
+  /** Gaussian negative log marginal likelihood of y under N(0, K) through
+    * a dense Cholesky of K: 0.5 y^T K^-1 y + logdet L + 0.5 n log 2 pi.
+    * Throws when K is not positive definite.
+    */
+  def choleskyNlml(k: DenseMatrix[Double], y: DenseVector[Double]): Double = {
+    val l = breeze.linalg.cholesky(k)
+    val alpha = lowerSolve(l, y)
+    val n = y.length
+    var logdet = 0.0
+    var quad = 0.0
+    var i = 0
+    while (i < n) { logdet += math.log(l(i, i)); quad += alpha(i) * alpha(i); i += 1 }
+    0.5 * quad + logdet + 0.5 * n * Log2Pi
+  }
 
   /** L x = v (forward substitution). */
   def lowerSolve(l: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] = {

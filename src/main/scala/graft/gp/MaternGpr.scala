@@ -33,7 +33,6 @@ final class MaternGpr(coords: DenseMatrix[Double], y: DenseVector[Double], val n
   val n: Int = coords.rows
   val d: Int = coords.cols
 
-  private val Log2Pi = math.log(2.0 * math.Pi)
   private val twoNu = 2.0 * nu
 
   private def kOfQ(q: Double, sf2: Double): Double =
@@ -69,15 +68,8 @@ final class MaternGpr(coords: DenseMatrix[Double], y: DenseVector[Double], val n
   def nlml(hyp: Array[Double]): Double = {
     require(hyp.length == nHypers)
     if (hyp.exists(_ <= 0)) return Double.PositiveInfinity
-    try {
-      val l = breeze.linalg.cholesky(kernelMatrix(hyp))
-      val alpha = lowerSolve(l, y)
-      var logdet = 0.0
-      var quad = 0.0
-      var i = 0
-      while (i < n) { logdet += math.log(l(i, i)); quad += alpha(i) * alpha(i); i += 1 }
-      0.5 * quad + logdet + 0.5 * n * Log2Pi
-    } catch { case _: Exception => Double.PositiveInfinity }
+    try choleskyNlml(kernelMatrix(hyp), y)
+    catch { case _: Exception => Double.PositiveInfinity }
   }
 
   def predict(xs: DenseMatrix[Double], hyp: Array[Double]): GprPrediction = {

@@ -43,7 +43,6 @@ final class MultioutputGpr(coords: DenseMatrix[Double], ys: DenseMatrix[Double],
   val numLatent: Int = h.cols
   require(h.rows == numOutputs, s"H must be P x L = $numOutputs x $numLatent")
 
-  private val Log2Pi = math.log(2.0 * math.Pi)
   private val np = n * numOutputs
 
   /** packed: L*d lengthscales, L kernel variances, P noise variances. */
@@ -113,15 +112,8 @@ final class MultioutputGpr(coords: DenseMatrix[Double], ys: DenseMatrix[Double],
   def nlml(hyp: Array[Double]): Double = {
     require(hyp.length == nHypers)
     if (hyp.exists(_ <= 0)) return Double.PositiveInfinity
-    try {
-      val l = breeze.linalg.cholesky(cov(hyp))
-      val alpha = lowerSolve(l, yFlat)
-      var logdet = 0.0
-      var quad = 0.0
-      var i = 0
-      while (i < np) { logdet += math.log(l(i, i)); quad += alpha(i) * alpha(i); i += 1 }
-      0.5 * quad + logdet + 0.5 * np * Log2Pi
-    } catch { case _: Exception => Double.PositiveInfinity }
+    try choleskyNlml(cov(hyp), yFlat)
+    catch { case _: Exception => Double.PositiveInfinity }
   }
 
   /** Posterior LATENT mean/variance per (prediction point, latent GP) —

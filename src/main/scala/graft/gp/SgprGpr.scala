@@ -58,58 +58,10 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
 
   private val blas = BLAS.getInstance
   private val Log2Pi = math.log(2.0 * math.Pi)
-  private val Jitter = 1e-6
-  private val Sqrt3 = math.sqrt(3.0)
 
   private val yArr = y.toArray
-  // inducing coordinates, row-major-ish access cache (m x d)
-  private val z: Array[Array[Double]] =
-    Array.tabulate(m)(i => Array.tabulate(d)(j => coords(inducing(i), j)))
-  private val x: Array[Array[Double]] =
-    Array.tabulate(n)(i => Array.tabulate(d)(j => coords(i, j)))
-
-  /** q = sqrt(3) * scaled distance between two cached coordinate rows. */
-  private def qOf(a: Array[Double], b: Array[Double], inv2l: Array[Double]): Double = {
-    var s = 0.0
-    var k = 0
-    while (k < d) { val dv = a(k) - b(k); s += dv * dv * inv2l(k); k += 1 }
-    math.sqrt(s)
-  }
-
-  /** column-major m x m Kuu + jitter I (padded for netlib offset checks). */
-  private def buildKuu(inv2l: Array[Double], sf2: Double): Array[Double] = {
-    val a = new Array[Double](m * m + m)
-    var j = 0
-    while (j < m) {
-      a(j + j * m) = sf2 + Jitter
-      var i = j + 1
-      while (i < m) {
-        val q = qOf(z(i), z(j), inv2l)
-        val v = sf2 * (1.0 + q) * math.exp(-q)
-        a(i + j * m) = v; a(j + i * m) = v
-        i += 1
-      }
-      j += 1
-    }
-    a
-  }
-
-  /** column-major m x n Kuf. */
-  private def buildKuf(inv2l: Array[Double], sf2: Double): Array[Double] = {
-    val a = new Array[Double](m * n)
-    var j = 0
-    while (j < n) {
-      val off = j * m
-      var i = 0
-      while (i < m) {
-        val q = qOf(z(i), x(j), inv2l)
-        a(i + off) = sf2 * (1.0 + q) * math.exp(-q)
-        i += 1
-      }
-      j += 1
-    }
-    a
-  }
+  private val cov = new Matern32Inducing(coords, inducing)
+  private val allRows = Array.tabulate(n)(identity)
 
   /** negative ELBO and (optionally) its analytic gradient w.r.t.
     * [ell..., sf2, sn2]; (+inf, null) when a Cholesky fails.
@@ -122,9 +74,9 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
     val sigma = math.sqrt(s)
     val inv2l = Array.tabulate(d)(k => 3.0 / (ell(k) * ell(k)))
 
-    val kuu = buildKuu(inv2l, sf2) // becomes U with Kuu = U^T U
+    val kuu = cov.kuu(inv2l, sf2) // becomes U with Kuu = U^T U
     if (FastSpd.potrfUpper(kuu, m) != 0) return (Double.PositiveInfinity, null)
-    val kuf = buildKuf(inv2l, sf2)
+    val kuf = cov.kuf(inv2l, sf2, allRows)
 
     // A = L^-1 Kuf / sigma  (L = U^T)
     val aMat = kuf.clone()
@@ -204,45 +156,16 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
     var j = 0
     while (j < n) {
       val off = j * m
-      val xr = x(j)
+      val xr = cov.x(j)
       var mi = 0
       while (mi < m) {
         val f = fu(mi + off)
-        if (f != 0.0) {
-          val zr = z(mi)
-          var ssum = 0.0
-          var k = 0
-          while (k < d) { val dv = zr(k) - xr(k); ssum += dv * dv * inv2l(k); k += 1 }
-          val q = math.sqrt(ssum)
-          val e = math.exp(-q)
-          k = 0
-          while (k < d) { val dv = zr(k) - xr(k); gl(k) += f * dv * dv * e; k += 1 }
-          gsf += f * (1.0 + q) * e
-        }
+        if (f != 0.0) gsf += cov.gradTerm(f, cov.z(mi), xr, inv2l, gl)
         mi += 1
       }
       j += 1
     }
-    var mj = 0
-    while (mj < m) {
-      val off = mj * m
-      val zj = z(mj)
-      var mi = 0
-      while (mi < m) {
-        val f = fuu(mi + off)
-        val zi = z(mi)
-        var ssum = 0.0
-        var k = 0
-        while (k < d) { val dv = zi(k) - zj(k); ssum += dv * dv * inv2l(k); k += 1 }
-        val q = math.sqrt(ssum)
-        val e = math.exp(-q)
-        k = 0
-        while (k < d) { val dv = zi(k) - zj(k); gl(k) += f * dv * dv * e; k += 1 }
-        gsf += f * (1.0 + q) * e
-        mi += 1
-      }
-      mj += 1
-    }
+    gsf = cov.kuuGrad(fuu, inv2l, gl, gsf)
 
     // tr(B^-1) for dELBO/ds
     val binv = b // reuse: b still holds B; factor+invert in place
@@ -257,11 +180,7 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
       0.5 * (sumKdiag - trQff) / (s * s)
 
     val grad = new Array[Double](d + 2)
-    var k = 0
-    while (k < d) {
-      grad(k) = -(3.0 * sf2 / (ell(k) * ell(k) * ell(k))) * gl(k)
-      k += 1
-    }
+    cov.lengthscaleGrads(ell, sf2, gl, grad, 0)
     grad(d) = -(gsf - 0.5 * n / s) // d kdiag/dsf2 = 1 per point
     grad(d + 1) = -dElboDs
     (-elbo, grad)
@@ -302,10 +221,9 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
     val sigma = math.sqrt(s)
     val inv2l = Array.tabulate(d)(k => 3.0 / (ell(k) * ell(k)))
 
-    val kuu = buildKuu(inv2l, sf2)
+    val kuu = cov.kuu(inv2l, sf2)
     require(FastSpd.potrfUpper(kuu, m) == 0, "Cholesky of Kuu failed in predict")
-    val kuf = buildKuf(inv2l, sf2)
-    val aMat = kuf
+    val aMat = cov.kuf(inv2l, sf2, allRows)
     FastSpd.trsmLUT(m, n, 1.0 / sigma, kuu, 0, m, aMat, 0, m)
     val b = new Array[Double](m * m + m)
     FastSpd.syrkUN(m, n, 1.0, aMat, 0, m, 0.0, b, 0, m)
@@ -319,21 +237,7 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
 
     val mStar = xs.rows
     // Kus (m x mStar), tmp1 = L^-1 Kus, tmp2 = LB^-1 tmp1
-    val kus = new Array[Double](m * mStar)
-    var j = 0
-    while (j < mStar) {
-      val off = j * m
-      var mi = 0
-      while (mi < m) {
-        var ssum = 0.0
-        var k = 0
-        while (k < d) { val dv = z(mi)(k) - xs(j, k); ssum += dv * dv * inv2l(k); k += 1 }
-        val q = math.sqrt(ssum)
-        kus(mi + off) = sf2 * (1.0 + q) * math.exp(-q)
-        mi += 1
-      }
-      j += 1
-    }
+    val kus = cov.kus(xs, inv2l, sf2)
     val tmp1 = kus.clone()
     FastSpd.trsmLUT(m, mStar, 1.0, kuu, 0, m, tmp1, 0, m)
     val tmp2 = tmp1.clone()
@@ -342,7 +246,7 @@ final class SgprGpr(coords: DenseMatrix[Double], y: DenseVector[Double], inducin
     val fs = new Array[Double](mStar)
     val fsVar = new Array[Double](mStar)
     val yVar = new Array[Double](mStar)
-    j = 0
+    var j = 0
     while (j < mStar) {
       val off = j * m
       var mean = 0.0

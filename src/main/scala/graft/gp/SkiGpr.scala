@@ -153,13 +153,7 @@ final class SkiGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
       val km = skiGram(hyp)
       var i = 0
       while (i < n) { km(i, i) += s; i += 1 }
-      val l = breeze.linalg.cholesky(km)
-      val alpha = lowerSolve(l, y)
-      var logdet = 0.0
-      var quad = 0.0
-      i = 0
-      while (i < n) { logdet += math.log(l(i, i)); quad += alpha(i) * alpha(i); i += 1 }
-      0.5 * quad + logdet + 0.5 * n * Log2Pi
+      choleskyNlml(km, y)
     } catch { case _: Exception => Double.PositiveInfinity }
   }
 

@@ -38,59 +38,13 @@ final class SvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
   private val b = if (batchSize <= 0 || batchSize > n) n else batchSize
 
   private val blas = BLAS.getInstance
-  private val Log2Pi = math.log(2.0 * math.Pi)
-  private val Jitter = 1e-6
 
   private val yArr = y.toArray
-  private val z: Array[Array[Double]] =
-    Array.tabulate(m)(i => Array.tabulate(d)(j => coords(inducing(i), j)))
-  private val x: Array[Array[Double]] =
-    Array.tabulate(n)(i => Array.tabulate(d)(j => coords(i, j)))
+  private val cov = new Matern32Inducing(coords, inducing)
 
   // variational state: mean (M) and lower-triangular scale (M x M col-major)
   private[gp] val vm = new Array[Double](m)
   private[gp] val vL = Array.tabulate(m * m)(i => if (i / m == i % m) 1.0 else 0.0)
-
-  private def qOf(a: Array[Double], c: Array[Double], inv2l: Array[Double]): Double = {
-    var s = 0.0; var k = 0
-    while (k < d) { val dv = a(k) - c(k); s += dv * dv * inv2l(k); k += 1 }
-    math.sqrt(s)
-  }
-
-  private def buildKuu(inv2l: Array[Double], sf2: Double): Array[Double] = {
-    val a = new Array[Double](m * m + m)
-    var j = 0
-    while (j < m) {
-      a(j + j * m) = sf2 + Jitter
-      var i = j + 1
-      while (i < m) {
-        val q = qOf(z(i), z(j), inv2l)
-        val v = sf2 * (1.0 + q) * math.exp(-q)
-        a(i + j * m) = v; a(j + i * m) = v
-        i += 1
-      }
-      j += 1
-    }
-    a
-  }
-
-  private def buildKufBatch(inv2l: Array[Double], sf2: Double,
-                            idx: Array[Int]): Array[Double] = {
-    val a = new Array[Double](m * idx.length)
-    var j = 0
-    while (j < idx.length) {
-      val off = j * m
-      val xr = x(idx(j))
-      var i = 0
-      while (i < m) {
-        val q = qOf(z(i), xr, inv2l)
-        a(i + off) = sf2 * (1.0 + q) * math.exp(-q)
-        i += 1
-      }
-      j += 1
-    }
-    a
-  }
 
   /** negative ELBO and (optionally) its analytic gradient w.r.t.
     * [vm (m) | vL lower-tri (m(m+1)/2, col-major) | ell... | sf2 | sn2]
@@ -106,7 +60,7 @@ final class SvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     val bs = idx.length
     val rho = n.toDouble / bs
 
-    val kuu = buildKuu(inv2l, sf2)
+    val kuu = cov.kuu(inv2l, sf2)
     val u = kuu.clone()
     if (FastSpd.potrfUpper(u, m) != 0) return (Double.PositiveInfinity, null)
     var logDetKuu = 0.0
@@ -118,7 +72,7 @@ final class SvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     i = 0
     while (i < m) { var j = i + 1; while (j < m) { w(j + i * m) = w(i + j * m); j += 1 }; i += 1 }
 
-    val kuf = buildKufBatch(inv2l, sf2, idx)
+    val kuf = cov.kuf(inv2l, sf2, idx)
     val pMat = kuf.clone()
     FastSpd.potrsUpper(u, m, pMat, bs) // P = Kuu^-1 Kuf_B
 
@@ -241,52 +195,21 @@ final class SvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     j = 0
     while (j < bs) {
       val off = j * m
-      val xr = x(idx(j))
+      val xr = cov.x(idx(j))
       val cj = cArrB(j)
       var mi = 0
       while (mi < m) {
         // Fu(mi, j) = (W m)_mi c_j - 2 dconst P(mi,j) + 2 dconst (W S P)(mi,j)
         val f = wm(mi) * cj - 2.0 * dconst * pMat(mi + off) + 2.0 * dconst * wsp(mi + off)
-        val zr = z(mi)
-        var ssum = 0.0
-        var k = 0
-        while (k < d) { val dv = zr(k) - xr(k); ssum += dv * dv * inv2l(k); k += 1 }
-        val q = math.sqrt(ssum)
-        val e = math.exp(-q)
-        k = 0
-        while (k < d) { val dv = zr(k) - xr(k); gl(k) += f * dv * dv * e; k += 1 }
-        gsf += f * (1.0 + q) * e
+        gsf += cov.gradTerm(f, cov.z(mi), xr, inv2l, gl)
         mi += 1
       }
       j += 1
     }
-    var mj = 0
-    while (mj < m) {
-      val off = mj * m
-      val zj = z(mj)
-      var mi = 0
-      while (mi < m) {
-        val f = fuu(mi + off)
-        val zi = z(mi)
-        var ssum = 0.0
-        var k = 0
-        while (k < d) { val dv = zi(k) - zj(k); ssum += dv * dv * inv2l(k); k += 1 }
-        val q = math.sqrt(ssum)
-        val e = math.exp(-q)
-        k = 0
-        while (k < d) { val dv = zi(k) - zj(k); gl(k) += f * dv * dv * e; k += 1 }
-        gsf += f * (1.0 + q) * e
-        mi += 1
-      }
-      mj += 1
-    }
+    gsf = cov.kuuGrad(fuu, inv2l, gl, gsf)
 
     val base = m + m * (m + 1) / 2
-    var k = 0
-    while (k < d) {
-      g(base + k) = -(3.0 * sf2 / (ell(k) * ell(k) * ell(k))) * gl(k)
-      k += 1
-    }
+    cov.lengthscaleGrads(ell, sf2, gl, g, base)
     // dkdiag/dsf2 = 1 per batch point: E-term contributes dconst * bs
     g(base + d) = -(gsf + dconst * bs)
     // d(-ELBO)/ds = -rho d/ds sum E_i
@@ -386,24 +309,10 @@ final class SvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     val sf2 = p.kernelVariance
     val s = p.likelihoodVariance
     val inv2l = Array.tabulate(d)(k => 3.0 / (ell(k) * ell(k)))
-    val kuu = buildKuu(inv2l, sf2)
+    val kuu = cov.kuu(inv2l, sf2)
     require(FastSpd.potrfUpper(kuu, m) == 0, "Cholesky of Kuu failed in predict")
     val mStar = xs.rows
-    val kus = new Array[Double](m * mStar)
-    var j = 0
-    while (j < mStar) {
-      val off = j * m
-      var i = 0
-      while (i < m) {
-        var ssum = 0.0
-        var k = 0
-        while (k < d) { val dv = z(i)(k) - xs(j, k); ssum += dv * dv * inv2l(k); k += 1 }
-        val q = math.sqrt(ssum)
-        kus(i + off) = sf2 * (1.0 + q) * math.exp(-q)
-        i += 1
-      }
-      j += 1
-    }
+    val kus = cov.kus(xs, inv2l, sf2)
     val pStar = kus.clone()
     FastSpd.potrsUpper(kuu, m, pStar, mStar)
     val qStar = pStar.clone()
@@ -411,7 +320,7 @@ final class SvgpGpr(coords: DenseMatrix[Double], y: DenseVector[Double],
     val fs = new Array[Double](mStar)
     val fsVar = new Array[Double](mStar)
     val yVar = new Array[Double](mStar)
-    j = 0
+    var j = 0
     while (j < mStar) {
       val off = j * m
       var mean = 0.0

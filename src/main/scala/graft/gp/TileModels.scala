@@ -138,34 +138,20 @@ object TileModels {
     (Array.tabulate(dd)(k => lo(k) - margin(k)), Array.tabulate(dd)(k => hi(k) + margin(k)))
   }
 
-  private final class VffModel(coords: DenseMatrix[Double], y: DenseVector[Double], rank: Int)
+  /** VFF or ASVGP on the padded domain with `mPerDim` features per dim. */
+  private final class InterDomainModel(coords: DenseMatrix[Double], y: DenseVector[Double],
+                                       mPerDim: Int, val name: String)
       extends PerDimVarianceModel(coords.cols) {
-    // rank = TOTAL inducing-feature budget: per-dim frequency count m such
-    // that (2m-1)^d <= rank (at least the zero + first harmonic)
-    private val mPerDim = math.max(2, ((math.pow(rank.toDouble, 1.0 / dd) + 1.0) / 2.0).toInt)
     private val (aArr, bArr) = paddedDomain(coords)
-    private val gp = new VffGpr(coords, y, Array.fill(dd)(mPerDim), aArr, bArr)
+    private val ms = Array.fill(dd)(mPerDim)
+    private val gp: InterDomainGpr =
+      if (name == "GraftVFF") new VffGpr(coords, y, ms, aArr, bArr)
+      else new AsvgpGpr(coords, y, ms, aArr, bArr)
     protected def objectiveH(h: Array[Double]): Double = gp.negElbo(h)
     protected def optimiseH(h: Array[Double], bij: Array[Bijector], maxIter: Int, tol: Double) =
       gp.optimise(h, bij, maxIter, tol)
     protected def predictH(xs: DenseMatrix[Double], h: Array[Double]): GprPrediction =
       gp.predict(xs, h)
-    def name: String = "GraftVFF"
-  }
-
-  private final class AsvgpModel(coords: DenseMatrix[Double], y: DenseVector[Double], rank: Int)
-      extends PerDimVarianceModel(coords.cols) {
-    // rank = TOTAL inducing-feature budget; B-splines converge at h^2 so
-    // give each dim the largest m with m^d <= rank (min 3 required)
-    private val mPerDim = math.max(3, math.pow(rank.toDouble, 1.0 / dd).toInt)
-    private val (aArr, bArr) = paddedDomain(coords)
-    private val gp = new AsvgpGpr(coords, y, Array.fill(dd)(mPerDim), aArr, bArr)
-    protected def objectiveH(h: Array[Double]): Double = gp.negElbo(h)
-    protected def optimiseH(h: Array[Double], bij: Array[Bijector], maxIter: Int, tol: Double) =
-      gp.optimise(h, bij, maxIter, tol)
-    protected def predictH(xs: DenseMatrix[Double], h: Array[Double]): GprPrediction =
-      gp.predict(xs, h)
-    def name: String = "GraftASVGP"
   }
 
   /** Selectable-smoothness exact GP (the GPyTorch backend's `smoothness`
@@ -214,8 +200,14 @@ object TileModels {
     case "GraftSGPR" => new SgprModel(coords, y, math.min(rank, coords.rows))
     case "GraftSVGP" => new SvgpModel(coords, y, math.min(rank, coords.rows))
     case "GraftNystroem" => new NystroemModel(coords, y, rank)
-    case "GraftVFF" => new VffModel(coords, y, math.max(rank, 9))
-    case "GraftASVGP" => new AsvgpModel(coords, y, math.max(rank, 27))
+    // VFF/ASVGP: rank = TOTAL inducing-feature budget. VFF takes the per-dim
+    // frequency count m with (2m-1)^d <= rank (at least the zero + first
+    // harmonic); B-splines converge at h^2, so ASVGP takes the largest m
+    // with m^d <= rank (min 3 required)
+    case "GraftVFF" => new InterDomainModel(coords, y,
+      math.max(2, ((math.pow(math.max(rank, 9).toDouble, 1.0 / coords.cols) + 1.0) / 2.0).toInt), name)
+    case "GraftASVGP" => new InterDomainModel(coords, y,
+      math.max(3, math.pow(math.max(rank, 27).toDouble, 1.0 / coords.cols).toInt), name)
     case "GraftKISS" => new SkiModel(coords, y, math.max(rank, 216))
     case "GraftMatern12" => new MaternNuModel(coords, y, 0.5)
     case "GraftMatern52" => new MaternNuModel(coords, y, 2.5)

@@ -57,19 +57,6 @@ object BloscLite {
     (codec == CodecBloscLz || codec == CodecLz4) && !leftover &&
       typesize > 1 && typesize <= 16 && bsize % typesize == 0 && bsize / typesize >= 128
 
-  /** byte-shuffle inverse: planes back to interleaved elements. */
-  private def unshuffle(block: Array[Byte], typesize: Int): Array[Byte] = {
-    val elems = block.length / typesize
-    val out = new Array[Byte](block.length)
-    var j = 0
-    while (j < typesize) {
-      var i = 0
-      while (i < elems) { out(i * typesize + j) = block(j * elems + i); i += 1 }
-      j += 1
-    }
-    out
-  }
-
   private def shuffle(block: Array[Byte], typesize: Int): Array[Byte] = {
     val elems = block.length / typesize
     val out = new Array[Byte](block.length)
@@ -175,7 +162,8 @@ object BloscLite {
         acc.recoverWith { case _ => scala.util.Try(parseBlock(bstarts(bi), bsize, ns)) }
       }.get
       val block =
-        if (byteShuffle && typesize > 1 && bsize % typesize == 0) unshuffle(block0, typesize)
+        if (byteShuffle && typesize > 1 && bsize % typesize == 0)
+          ChunkCodecs.unshuffle(block0, typesize)
         else block0
       System.arraycopy(block, 0, out, bi * blocksize, bsize)
       bi += 1
@@ -210,14 +198,7 @@ object BloscLite {
         if (c != null) c else src
       case CodecLz4 => Lz4Lite.compress(src)
       case CodecZstd => ZstdLite.compress(src)
-      case CodecZlib =>
-        val d = new java.util.zip.Deflater(clevel)
-        d.setInput(src); d.finish()
-        val o = new java.io.ByteArrayOutputStream(src.length / 2 + 64)
-        val tmp = new Array[Byte](8192)
-        while (!d.finished()) o.write(tmp, 0, d.deflate(tmp))
-        d.end()
-        o.toByteArray
+      case CodecZlib => ChunkCodecs.deflate(src, clevel)
     }
     def writeI32(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
       o.write(v & 0xff); o.write((v >>> 8) & 0xff); o.write((v >>> 16) & 0xff); o.write((v >>> 24) & 0xff)

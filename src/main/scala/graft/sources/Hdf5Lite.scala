@@ -625,16 +625,7 @@ object Hdf5Lite {
       bb.array()
     }
     def compress(raw: Array[Byte]): Array[Byte] =
-      if (deflate == 0) raw
-      else {
-        val d = new java.util.zip.Deflater(deflate)
-        d.setInput(raw); d.finish()
-        val out = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-        val tmp = new Array[Byte](8192)
-        while (!d.finished()) out.write(tmp, 0, d.deflate(tmp))
-        d.end()
-        out.toByteArray
-      }
+      if (deflate == 0) raw else ChunkCodecs.deflate(raw, deflate)
 
     def rawCompChunk(c: H5CompoundVar, off0: Int, c0: Int): Array[Byte] = {
       // full-size chunk of records, edge chunks zero-padded
@@ -1912,32 +1903,10 @@ object Hdf5Lite {
           // undo filters in reverse pipeline order
           if (filters.contains(32000)) // h5py's lzf filter (id 32000)
             chunk = LzfLite.decompress(chunk, 0, chunk.length, chunkByteSize, name)
-          if (filters.contains(1)) {
-            val inf = new java.util.zip.Inflater()
-            inf.setInput(chunk)
-            val outB = new java.io.ByteArrayOutputStream(chunk.length * 3 + 64)
-            val tmp = new Array[Byte](8192)
-            while (!inf.finished()) {
-              val got = inf.inflate(tmp)
-              if (got == 0 && inf.needsInput()) throw new IllegalArgumentException(
-                s"$name: truncated deflate chunk")
-              outB.write(tmp, 0, got)
-            }
-            inf.end()
-            chunk = outB.toByteArray
-          }
-          if (filters.contains(2)) {
-            // shuffle filter: bytes grouped by significance — transpose back
-            val elems = chunk.length / dtSize
-            val un = new Array[Byte](chunk.length)
-            var j = 0
-            while (j < dtSize) {
-              var i = 0
-              while (i < elems) { un(i * dtSize + j) = chunk(j * elems + i); i += 1 }
-              j += 1
-            }
-            chunk = un
-          }
+          if (filters.contains(1))
+            chunk = ChunkCodecs.inflate(chunk, s"$name: truncated deflate chunk")
+          // shuffle filter: bytes grouped by significance — transpose back
+          if (filters.contains(2)) chunk = ChunkCodecs.unshuffle(chunk, dtSize)
           // scatter valid region into the row-major output
           val d0 = shape.head
           val rest = shape.drop(1).product

@@ -306,19 +306,7 @@ object ZarrGrid extends Serializable {
         while (got >= 0) { o.write(tmp, 0, got); got = in.read(tmp) }
         in.close()
         o.toByteArray
-      case "zlib" =>
-        val inf = new java.util.zip.Inflater()
-        inf.setInput(raw)
-        val out = new java.io.ByteArrayOutputStream(raw.length * 3 + 64)
-        val tmp = new Array[Byte](8192)
-        while (!inf.finished()) {
-          val got = inf.inflate(tmp)
-          if (got == 0 && inf.needsInput())
-            throw new IllegalArgumentException(s"$name: truncated zlib chunk")
-          out.write(tmp, 0, got)
-        }
-        inf.end()
-        out.toByteArray
+      case "zlib" => ChunkCodecs.inflate(raw, s"$name: truncated zlib chunk")
     }
 
   private def decodePlain(raw: Array[Byte], m: ZMeta, name: String): Array[Double] = {
@@ -1317,7 +1305,7 @@ object ZarrGrid extends Serializable {
     */
   private def encodeChunk(raw: Array[Byte], compressor: String, v3: Boolean = false): Array[Byte] =
     compressor match {
-      case "zlib" => if (v3) gzipBytes(raw) else zlibBytes(raw)
+      case "zlib" => if (v3) gzipBytes(raw) else ChunkCodecs.deflate(raw, 5)
       case "blosc" => BloscLite.compress(raw, typesize = 8, BloscLite.CodecLz4)
       case "zstd" => ZstdLite.compress(raw)
       case o => throw new IllegalArgumentException(
@@ -1401,16 +1389,6 @@ object ZarrGrid extends Serializable {
     val gz = new java.util.zip.GZIPOutputStream(o) { `def`.setLevel(5) }
     gz.write(raw); gz.close()
     o.toByteArray
-  }
-
-  private def zlibBytes(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(5)
-    d.setInput(raw); d.finish()
-    val out = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-    val tmp = new Array[Byte](8192)
-    while (!d.finished()) out.write(tmp, 0, d.deflate(tmp))
-    d.end()
-    out.toByteArray
   }
 
   private def doubleLeBytes(vals: Array[Double]): Array[Byte] = {
