@@ -9,19 +9,18 @@ import breeze.linalg.DenseMatrix
   * k(a, b) = sf2 (1 + q) e^-q with q = sqrt(sum_k (a_k - b_k)^2 inv2l(k)).
   */
 private[gp] final class Matern32Inducing(coords: DenseMatrix[Double], inducing: Array[Int]) {
-  val n: Int = coords.rows
-  val d: Int = coords.cols
-  val m: Int = inducing.length
+  private val d = coords.cols
+  private val m = inducing.length
   private val Jitter = 1e-6
 
   // inducing and training coordinates, cached as rows (m x d, n x d)
   val z: Array[Array[Double]] =
     Array.tabulate(m)(i => Array.tabulate(d)(j => coords(inducing(i), j)))
   val x: Array[Array[Double]] =
-    Array.tabulate(n)(i => Array.tabulate(d)(j => coords(i, j)))
+    Array.tabulate(coords.rows)(i => Array.tabulate(d)(j => coords(i, j)))
 
   /** q = sqrt(3) * scaled distance between two cached coordinate rows. */
-  def qOf(a: Array[Double], b: Array[Double], inv2l: Array[Double]): Double = {
+  private def qOf(a: Array[Double], b: Array[Double], inv2l: Array[Double]): Double = {
     var s = 0.0
     var k = 0
     while (k < d) { val dv = a(k) - b(k); s += dv * dv * inv2l(k); k += 1 }
